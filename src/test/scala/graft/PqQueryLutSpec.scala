@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 import graft.functions.PqQueryLut
 
@@ -34,19 +35,35 @@ class PqQueryLutSpec extends SparkSpec {
   }
 
   test("short vectors null the out-of-range subspaces (both eval paths)") {
-    import spark.implicits._
     val cb = Array.fill(numSub, ksz, sub)(0.5)
-    // only the first subspace is covered: entries 1.. must be null
-    val df = Seq(Tuple1(Array.fill(sub)(1.0))).toDF("vn")
-      .withColumn("lut", PqQueryLut.queryLut(col("vn"), cb))
-    val lut = df.select("lut").head().getSeq[Seq[java.lang.Double]](0)
+    // only the first subspace is covered: entries 1.. must be null.
+    // Codegen path: a range source is neither local nor foldable, so the
+    // expression is compiled into the whole-stage Project (a local Seq
+    // would be evaluated by ConvertToLocalRelation in the optimizer).
+    val df = spark.range(1)
+      .select(array(Seq.fill(sub)((col("id") + 1).cast("double")): _*).as("vn"))
+      .select(PqQueryLut.queryLut(col("vn"), cb).as("lut"))
+    val plan = df.queryExecution.executedPlan
+    assert(plan.exists {
+      case w: WholeStageCodegenExec => w.child.exists(
+        _.expressions.exists(_.exists(_.isInstanceOf[PqQueryLut])))
+      case _ => false
+    }, s"pq_query_lut is not whole-stage compiled:\n$plan")
+    // no silent fallback to the interpreted plan if doGenCode fails to compile
+    val fallback = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    val rows = try df.collect() finally
+      spark.conf.set("spark.sql.codegen.fallback", fallback)
+    // Spark returns the inner arrays as mutable.ArraySeq: read them as
+    // collection.Seq, not the immutable Seq that Seq[...] means in 2.13
+    val lut = rows.head.getSeq[collection.Seq[java.lang.Double]](0)
     assert(lut.size === numSub)
     assert(lut.head.forall(_ == 0.5 * sub))
     assert(lut.tail.forall(_.forall(_ == null)))
     // interpreted path via constant folding on a literal input
     val lit = spark.sql(s"SELECT array(${Array.fill(sub)("1D").mkString(",")}) AS vn")
       .withColumn("lut", PqQueryLut.queryLut(col("vn"), cb))
-    val lut2 = lit.select("lut").head().getSeq[Seq[java.lang.Double]](0)
+    val lut2 = lit.select("lut").head().getSeq[collection.Seq[java.lang.Double]](0)
     assert(lut2.head.forall(_ == 0.5 * sub) && lut2.tail.forall(_.forall(_ == null)))
   }
 }
