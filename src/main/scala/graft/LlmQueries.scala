@@ -21,13 +21,8 @@ object LlmQueries {
     * probe gate (s05) and the streaming serve gate (st07). Centroids are
     * a plain parquet, assignments are cell-partitioned so probes prune
     * to their nProbe cells. */
-  private def stagedIvfIndexDir(s: SparkSession, dir: String): String = {
-    val tmp = System.getProperty("java.io.tmpdir")
-    val tag = Tables.dataFingerprint(dir)
-    val root = new java.io.File(s"$tmp/graft_ivfidx_$tag")
-    if (!root.exists()) {
-      Relational.staleArtifactSweep(new java.io.File(tmp),
-        "graft_ivfidx_", tag)
+  private def stagedIvfIndexDir(s: SparkSession, dir: String): String =
+    Staged.dir("graft_ivfidx_", dir) { root =>
       val planted = Similarity.plantedGappedCorpus(embs(s, dir), "vec_id",
         "embedding")
       val (centroids, assignments) = Similarity.ivfIndex(planted,
@@ -36,21 +31,14 @@ object LlmQueries {
       assignments.write.mode("overwrite").partitionBy("cell")
         .parquet(s"$root/assignments")
     }
-    root.toString
-  }
 
   /** Stage (once per fixture fingerprint) the persisted PQ index over
     * the planted gapped corpus: trained codebooks as a tiny (m, k,
     * centroid) parquet and the corpus CODES (vec_id, codes: array<int>)
     * — numSub small ints per vector, the compressed scan the ADC probe
     * reads instead of the float embeddings. */
-  private def stagedPqIndexDir(s: SparkSession, dir: String): String = {
-    val tmp = System.getProperty("java.io.tmpdir")
-    val tag = Tables.dataFingerprint(dir)
-    val root = new java.io.File(s"$tmp/graft_pqidx_$tag")
-    if (!root.exists()) {
-      Relational.staleArtifactSweep(new java.io.File(tmp),
-        "graft_pqidx_", tag)
+  private def stagedPqIndexDir(s: SparkSession, dir: String): String =
+    Staged.dir("graft_pqidx_", dir) { root =>
       val planted = Similarity.plantedGappedCorpus(embs(s, dir), "vec_id",
         "embedding")
       val cb = Similarity.pqTrainCodebooks(planted, "vec_id", "embedding",
@@ -61,40 +49,19 @@ object LlmQueries {
           idOut = "neighbor_id")
         .write.mode("overwrite").parquet(s"$root/codes")
     }
-    root.toString
-  }
 
   /** Staging directory for the streaming gates: the file stream source
     * requires a DIRECTORY, so the single events file is copied into one.
-    * Keyed by the data fingerprint (like the b01/z01 artifacts) so
-    * repeated invocations — verify, five bench reps — stage zero new
-    * bytes and nothing leaks per run (the previous per-invocation
-    * createTempDirectory left one copied parquet behind every call:
-    * deleteOnExit removes only empty directories). A regenerated fixture
-    * gets a fresh tag; stale tags are swept. The copy lands under a temp
-    * name and is atomically moved, so an interrupted run never leaves a
-    * torn file a later run would stream from.
+    * It is staged once per data fingerprint: repeated invocations —
+    * verify, five bench reps — copy zero new bytes.
     */
-  private def stagedEventsDir(dir: String): String = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = System.getProperty("java.io.tmpdir")
-    val tag = Tables.dataFingerprint(dir)
-    val staged = new java.io.File(s"$tmp/graft_stream_$tag")
-    val dst = new java.io.File(staged, "events.parquet")
-    if (!dst.exists()) {
-      Relational.staleArtifactSweep(new java.io.File(tmp), "graft_stream_", tag)
-      staged.mkdirs()
-      val t = Files.createTempFile(staged.toPath, "events", ".tmp")
-      Files.copy(Paths.get(s"$dir/events.parquet"), t,
-        StandardCopyOption.REPLACE_EXISTING)
-      try Files.move(t, dst.toPath, StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          Files.deleteIfExists(t): Unit // lost a benign race: reuse theirs
-      }
+  private def stagedEventsDir(dir: String): String =
+    Staged.dir("graft_stream_", dir) { staged =>
+      import java.nio.file.{Files, Paths}
+      Files.createDirectories(Paths.get(staged))
+      Files.copy(Paths.get(s"$dir/events.parquet"),
+        Paths.get(staged, "events.parquet")): Unit
     }
-    staged.toString
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // exact dedup groups (hash-groupBy on content digest)
@@ -127,7 +94,10 @@ object LlmQueries {
     },
 
     // MinHash+LSH with exact-Jaccard verification: candidates via banding,
-    // recall ~1 at the 0.6 threshold => output equals the exact d02 result
+    // so the output is a subset of the exact d02 result. Recall is
+    // probabilistic (a pair at J misses with probability (1 - J^4)^32,
+    // 1.2% at 0.6); the gate equals d02 because the fixture has no pair
+    // that misses
     "d03_dedup_minhash_lsh" -> { (s, dir) =>
       Dedup.minhashNearDuplicates(docs(s, dir), "doc_id", "text", 0.6)
     },
@@ -135,28 +105,24 @@ object LlmQueries {
     // INCREMENTAL dedup in the gate — the daily-ingest shape: even doc
     // ids play the pre-existing indexed corpus, odd ids the newly
     // ingested batch. The batch probes the persisted band index
-    // (new-vs-old) plus itself (new-vs-new); with d03's parameters the
-    // banding recall is ~1, so the result must equal the exact Jaccard
-    // join RESTRICTED to pairs touching the batch — which the oracle
-    // computes from scratch with the parity predicate
+    // (new-vs-old) plus itself (new-vs-new). With d03's parameters the
+    // result is a subset of the exact Jaccard join RESTRICTED to pairs
+    // touching the batch — which the oracle computes from scratch with
+    // the parity predicate; it equals it because no fixture pair misses
+    // the banding (per-pair miss probability (1 - J^4)^32, 1.2% at 0.6)
     "d12_dedup_incremental" -> { (s, dir) =>
       val d = docs(s, dir)
       val batch = d.filter(col("doc_id") % 2 === 1)
-      // the index is PERSISTED in production — stage it fingerprint-keyed
-      // (the b01/z01 artifact pattern) so the gate measures the actual
-      // per-batch probe, not an index rebuild per run
-      val tmp = System.getProperty("java.io.tmpdir")
-      val tag = Tables.dataFingerprint(dir)
-      val idxDir = new java.io.File(s"$tmp/graft_mhidx_$tag")
-      if (!idxDir.exists()) {
-        Relational.staleArtifactSweep(new java.io.File(tmp),
-          "graft_mhidx_", tag)
+      // the index is PERSISTED in production — stage it once per fixture
+      // so the gate measures the actual per-batch probe, not an index
+      // rebuild per run
+      val idxDir = Staged.dir("graft_mhidx_", dir) { p =>
         Dedup.minhashBandIndex(d.filter(col("doc_id") % 2 === 0),
             "doc_id", "text")
-          .write.mode("overwrite").parquet(idxDir.toString)
+          .write.mode("overwrite").parquet(p)
       }
       Dedup.incrementalMinhashNearDuplicates(batch, d,
-          s.read.parquet(idxDir.toString), "doc_id", "text", 0.6)
+          s.read.parquet(idxDir), "doc_id", "text", 0.6)
         .orderBy(col("a_id"), col("b_id"))
     },
 
@@ -248,17 +214,12 @@ object LlmQueries {
       // output table; cluster formation consumes it) — stage them
       // fingerprint-keyed like d12's band index, so repeated invocations
       // measure cluster formation instead of a MinHash rebuild per rep
-      val tmp = System.getProperty("java.io.tmpdir")
-      val tag = Tables.dataFingerprint(dir)
-      val pairDir = new java.io.File(s"$tmp/graft_mhpairs_$tag")
-      if (!pairDir.exists()) {
-        Relational.staleArtifactSweep(new java.io.File(tmp),
-          "graft_mhpairs_", tag)
+      val pairDir = Staged.dir("graft_mhpairs_", dir) { p =>
         Dedup.minhashNearDuplicates(d, "doc_id", "text", 0.6)
-          .write.mode("overwrite").parquet(pairDir.toString)
+          .write.mode("overwrite").parquet(p)
       }
       Dedup.duplicateClustersFromPairs(d,
-          s.read.parquet(pairDir.toString), "doc_id")
+          s.read.parquet(pairDir), "doc_id")
         .orderBy(col("doc_id"))
     },
 
@@ -380,8 +341,9 @@ object LlmQueries {
     },
 
     // per-source duplication-rate rollup over the MinHash pair relation
-    // (recall ~1 at 0.6 => the pairs equal the exact Jaccard join, so
-    // the report is exactly recomputable)
+    // (the pairs are d03's: they equal the exact Jaccard join on this
+    // fixture, where no pair misses the banding, so the report is exactly
+    // recomputable)
     "d18_dedup_report" -> { (s, dir) =>
       val d = docs(s, dir)
       Dedup.dedupReport(d,
@@ -472,12 +434,7 @@ object LlmQueries {
     // the batch recomputation regardless of micro-batch splits
     "st12_stream_upsert_compact" -> { (s, dir) =>
       val d = docs(s, dir)
-      val tmp = System.getProperty("java.io.tmpdir")
-      val fpTag = Tables.dataFingerprint(dir)
-      val boot = new java.io.File(s"$tmp/graft_st12boot_$fpTag")
-      if (!boot.exists()) {
-        Relational.staleArtifactSweep(new java.io.File(tmp),
-          "graft_st12boot_", fpTag)
+      val boot = Staged.dir("graft_st12boot_", dir) { p =>
         val revs = d.select(col("doc_id"), lit(0).as("rev"), col("text"))
           .unionByName(d.filter(col("doc_id") % 3 === 0)
             .select(col("doc_id"), lit(1).as("rev"),
@@ -486,12 +443,9 @@ object LlmQueries {
             .select(col("doc_id"), lit(2).as("rev"),
               concat(col("text"), lit(" r2")).as("text")))
         revs.repartition(3).write.mode("overwrite")
-          .parquet(s"$boot/incoming")
+          .parquet(s"$p/incoming")
       }
-      val runTag = System.nanoTime().toString
-      val run = s"$tmp/graft_st12run_$runTag"
-      try Relational.staleArtifactSweep(new java.io.File(tmp),
-        "graft_st12run_", runTag) catch { case _: Throwable => }
+      val run = Staged.runDir("graft_st12run_")
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id",
           org.apache.spark.sql.types.LongType),
@@ -1068,27 +1022,17 @@ object LlmQueries {
     // run, and the oracle is d12's exact restricted Jaccard join.
     "st06_stream_incremental_dedup" -> { (s, dir) =>
       val d = docs(s, dir)
-      val tmp = System.getProperty("java.io.tmpdir")
       // bootstrap index + incoming files are deterministic per fixture
       // and PRE-EXIST in production (the index is yesterday's state, the
       // files are the ingest drop) — stage both fingerprint-keyed so
       // repeated invocations measure the DRAIN, not a bootstrap rebuild
-      val fpTag = Tables.dataFingerprint(dir)
-      val boot = new java.io.File(s"$tmp/graft_st06boot_$fpTag")
-      if (!boot.exists()) {
-        Relational.staleArtifactSweep(new java.io.File(tmp),
-          "graft_st06boot_", fpTag)
+      val boot = Staged.dir("graft_st06boot_", dir) { p =>
         graft.streaming.IncrementalDedup.writeIndex(
-          d.filter(col("doc_id") % 2 === 0), s"$boot/index", batchId = -1L)
+          d.filter(col("doc_id") % 2 === 0), s"$p/index", batchId = -1L)
         d.filter(col("doc_id") % 2 === 1).repartition(2)
-          .write.mode("overwrite").parquet(s"$boot/incoming")
+          .write.mode("overwrite").parquet(s"$p/incoming")
       }
-      val runTag = System.nanoTime().toString
-      val run = s"$tmp/graft_st06run_$runTag"
-      // sweep PREVIOUS runs' artifacts, keep this run's (the returned
-      // DataFrame reads the sink lazily; the next run sweeps this one)
-      try Relational.staleArtifactSweep(new java.io.File(tmp),
-        "graft_st06run_", runTag) catch { case _: Throwable => }
+      val run = Staged.runDir("graft_st06run_")
       // the run APPENDS to its index — work on a copy of the bootstrap
       val src = java.nio.file.Paths.get(s"$boot/index")
       val dst = java.nio.file.Paths.get(s"$run/index")
@@ -1116,19 +1060,11 @@ object LlmQueries {
       val planted = Similarity.plantedGappedCorpus(embs(s, dir), "vec_id",
         "embedding")
       val idxRoot = stagedIvfIndexDir(s, dir)
-      val tmp = System.getProperty("java.io.tmpdir")
-      val fpTag = Tables.dataFingerprint(dir)
-      val boot = new java.io.File(s"$tmp/graft_st07boot_$fpTag")
-      if (!boot.exists()) {
-        Relational.staleArtifactSweep(new java.io.File(tmp),
-          "graft_st07boot_", fpTag)
+      val boot = Staged.dir("graft_st07boot_", dir) { p =>
         planted.filter(col("vec_id") < 10).repartition(2)
-          .write.mode("overwrite").parquet(s"$boot/queries")
+          .write.mode("overwrite").parquet(s"$p/queries")
       }
-      val runTag = System.nanoTime().toString
-      val run = s"$tmp/graft_st07run_$runTag"
-      try Relational.staleArtifactSweep(new java.io.File(tmp),
-        "graft_st07run_", runTag) catch { case _: Throwable => }
+      val run = Staged.runDir("graft_st07run_")
       graft.streaming.AnnServe.runAvailableNow(s, s"$boot/queries",
           planted.schema, idxRoot, s"$run/topk", 5, 4)
         .orderBy(col("query_id"), col("rnk"))
@@ -1142,19 +1078,11 @@ object LlmQueries {
       val planted = Similarity.plantedGappedCorpus(embs(s, dir), "vec_id",
         "embedding")
       val idxRoot = stagedPqIndexDir(s, dir)
-      val tmp = System.getProperty("java.io.tmpdir")
-      val fpTag = Tables.dataFingerprint(dir)
-      val boot = new java.io.File(s"$tmp/graft_st09boot_$fpTag")
-      if (!boot.exists()) {
-        Relational.staleArtifactSweep(new java.io.File(tmp),
-          "graft_st09boot_", fpTag)
+      val boot = Staged.dir("graft_st09boot_", dir) { p =>
         planted.filter(col("vec_id") < 10).repartition(2)
-          .write.mode("overwrite").parquet(s"$boot/queries")
+          .write.mode("overwrite").parquet(s"$p/queries")
       }
-      val runTag = System.nanoTime().toString
-      val run = s"$tmp/graft_st09run_$runTag"
-      try Relational.staleArtifactSweep(new java.io.File(tmp),
-        "graft_st09run_", runTag) catch { case _: Throwable => }
+      val run = Staged.runDir("graft_st09run_")
       graft.streaming.PqServe.runAvailableNow(s, s"$boot/queries",
           planted.schema, idxRoot, planted, s"$run/topk", 5, 64)
         .orderBy(col("query_id"), col("rnk"))
@@ -1168,21 +1096,13 @@ object LlmQueries {
     // assignment, so s13's unrolled-Lloyd oracle carries over verbatim.
     "st10_stream_cluster_route" -> { (s, dir) =>
       val e = embs(s, dir)
-      val tmp = System.getProperty("java.io.tmpdir")
-      val fpTag = Tables.dataFingerprint(dir)
-      val boot = new java.io.File(s"$tmp/graft_st10boot_$fpTag")
-      if (!boot.exists()) {
-        Relational.staleArtifactSweep(new java.io.File(tmp),
-          "graft_st10boot_", fpTag)
+      val boot = Staged.dir("graft_st10boot_", dir) { p =>
         Clustering.centroidsDf(s, Clustering.kmeansCentroids(e, "vec_id",
             "embedding", k = 8, iters = 4))
-          .write.mode("overwrite").parquet(s"$boot/centroids")
-        e.repartition(2).write.mode("overwrite").parquet(s"$boot/incoming")
+          .write.mode("overwrite").parquet(s"$p/centroids")
+        e.repartition(2).write.mode("overwrite").parquet(s"$p/incoming")
       }
-      val runTag = System.nanoTime().toString
-      val run = s"$tmp/graft_st10run_$runTag"
-      try Relational.staleArtifactSweep(new java.io.File(tmp),
-        "graft_st10run_", runTag) catch { case _: Throwable => }
+      val run = Staged.runDir("graft_st10run_")
       graft.streaming.ClusterServe.runAvailableNow(s, s"$boot/incoming",
           e.schema, s"$boot/centroids", s"$run/assign")
         .orderBy(col("vec_id"))
@@ -1196,20 +1116,12 @@ object LlmQueries {
     // segmentation, so t21's serially-replayed oracle carries over.
     "st11_stream_bpe_segment" -> { (s, dir) =>
       val d = docs(s, dir)
-      val tmp = System.getProperty("java.io.tmpdir")
-      val fpTag = Tables.dataFingerprint(dir)
-      val boot = new java.io.File(s"$tmp/graft_st11boot_$fpTag")
-      if (!boot.exists()) {
-        Relational.staleArtifactSweep(new java.io.File(tmp),
-          "graft_st11boot_", fpTag)
+      val boot = Staged.dir("graft_st11boot_", dir) { p =>
         Bpe.mergesDf(d, "text", numMerges = 6)
-          .write.mode("overwrite").parquet(s"$boot/merges")
-        d.repartition(2).write.mode("overwrite").parquet(s"$boot/incoming")
+          .write.mode("overwrite").parquet(s"$p/merges")
+        d.repartition(2).write.mode("overwrite").parquet(s"$p/incoming")
       }
-      val runTag = System.nanoTime().toString
-      val run = s"$tmp/graft_st11run_$runTag"
-      try Relational.staleArtifactSweep(new java.io.File(tmp),
-        "graft_st11run_", runTag) catch { case _: Throwable => }
+      val run = Staged.runDir("graft_st11run_")
       graft.streaming.BpeServe.runAvailableNow(s, s"$boot/incoming",
           d.schema, s"$boot/merges", s"$run/pieces")
         .orderBy(col("doc_id"))
@@ -1227,18 +1139,10 @@ object LlmQueries {
         .agg(expr("percentile(quality_score, array(0.1, 0.9))").as("b"))
         .select(col("b").getItem(0).as("lo"), col("b").getItem(1).as("hi"))
         .head()
-      val tmp = System.getProperty("java.io.tmpdir")
-      val fpTag = Tables.dataFingerprint(dir)
-      val boot = new java.io.File(s"$tmp/graft_st08boot_$fpTag")
-      if (!boot.exists()) {
-        Relational.staleArtifactSweep(new java.io.File(tmp),
-          "graft_st08boot_", fpTag)
-        d.repartition(2).write.mode("overwrite").parquet(s"$boot/incoming")
+      val boot = Staged.dir("graft_st08boot_", dir) { p =>
+        d.repartition(2).write.mode("overwrite").parquet(s"$p/incoming")
       }
-      val runTag = System.nanoTime().toString
-      val run = s"$tmp/graft_st08run_$runTag"
-      try Relational.staleArtifactSweep(new java.io.File(tmp),
-        "graft_st08run_", runTag) catch { case _: Throwable => }
+      val run = Staged.runDir("graft_st08run_")
       graft.streaming.QualityRouter.runAvailableNow(s, s"$boot/incoming",
           d.schema, b.getDouble(0), b.getDouble(1), s"$run/keep",
           s"$run/reject")

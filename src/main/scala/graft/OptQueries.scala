@@ -1,6 +1,7 @@
 package graft
 
 import scala.collection.concurrent.TrieMap
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core.JoinOperator
 import graft.enforce.PlanEnforcer
@@ -37,7 +38,7 @@ object OptQueries {
     statsCache.getOrElseUpdate((s, dir), {
       val st = new EmulatedStatistics(s)
       val f = s"${System.getProperty("java.io.tmpdir")}/graft_stats_cache_${Tables.dataFingerprint(dir)}.json"
-      try st.loadFrom(f) catch { case _: Throwable => }
+      try st.loadFrom(f) catch { case NonFatal(_) => }
       st.autoPersistTo(f)
       st
     })

@@ -18,24 +18,6 @@ object Relational {
 
   private def ts(v: String): Column = lit(v).cast("timestamp")
 
-  /** Delete derived-artifact directories under `root` whose name starts
-    * with `prefix` but carries a fingerprint tag other than `keepTag` —
-    * regenerated fixtures would otherwise accumulate one stale copy per
-    * data fingerprint in java.io.tmpdir. Best-effort: artifact hygiene
-    * must never fail a gate query.
-    */
-  private[graft] def staleArtifactSweep(root: java.io.File, prefix: String,
-      keepTag: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-      f.delete(); ()
-    }
-    try Option(root.listFiles()).toSeq.flatten
-      .filter(f => f.getName.startsWith(prefix) && f.getName != prefix + keepTag)
-      .foreach(rm)
-    catch { case _: Throwable => }
-  }
-
   // ---------------------------------------------------------------- queries
 
   // The correctness gate compares result SETS (rows are sorted before
@@ -802,11 +784,14 @@ object Relational {
         // _SUCCESS commit marker exist: an interrupted prior run (Verify's
         // per-query timeout) can leave a partial directory that a bare
         // existence check would happily read as-is; mode("overwrite")
-        // clears any partial data before the rewrite
+        // clears any partial data before the rewrite. Not Staged.dir:
+        // saveAsTable registers the path it writes, so the table cannot
+        // be built under a temp name and renamed, and the catalog entry
+        // it checks is rebuilt in every JVM anyway
         val committed = new java.io.File(dataDir, "_SUCCESS").exists()
         if (!s.catalog.tableExists(name) || !committed) {
           if (s.catalog.tableExists(name)) s.sql(s"DROP TABLE `$name`")
-          staleArtifactSweep(new java.io.File(tmp), s"graft_b01_${t}_", tag)
+          Staged.sweep(s"graft_b01_${t}_", tag)
           Tables.load(s, dir, t).write.mode("overwrite").format("parquet")
             .option("path", dataDir.getAbsolutePath)
             .bucketBy(8, key).sortBy(key).saveAsTable(name)
@@ -822,16 +807,9 @@ object Relational {
     // partitioned by order status, read back through a partition filter —
     // answers must equal filtering the unpartitioned original
     "p01_partition_pruned" -> { (s, dir) =>
-      val tmp = System.getProperty("java.io.tmpdir")
-      val tag = Tables.dataFingerprint(dir)
-      val path = s"$tmp/graft_p01_$tag"
-      // gate on the writer's _SUCCESS commit marker, not bare directory
-      // existence — an interrupted prior write leaves a partial directory
-      // (mode("overwrite") inside writePartitioned clears it on rewrite)
-      if (!new java.io.File(path, "_SUCCESS").exists()) {
-        staleArtifactSweep(new java.io.File(tmp), "graft_p01_", tag)
+      val path = Staged.dir("graft_p01_", dir) { p =>
         sources.Sources.writePartitioned(
-          Tables.load(s, dir, "orders"), path, "o_orderstatus")
+          Tables.load(s, dir, "orders"), p, "o_orderstatus")
       }
       s.read.parquet(path)
         .filter(col("o_orderstatus") === "F")
@@ -982,12 +960,8 @@ object Relational {
     // filter over the original layout; the file-skipping effect of the
     // layout is asserted separately in ZOrderSpec
     "z01_zorder_skipping" -> { (s, dir) =>
-      val tmp = System.getProperty("java.io.tmpdir")
-      val tag = Tables.dataFingerprint(dir)
-      val path = s"$tmp/graft_z01_$tag"
-      if (!new java.io.File(path, "_SUCCESS").exists()) {
-        staleArtifactSweep(new java.io.File(tmp), "graft_z01_", tag)
-        sources.Sources.writeZOrdered(Tables.load(s, dir, "lineitem"), path,
+      val path = Staged.dir("graft_z01_", dir) { p =>
+        sources.Sources.writeZOrdered(Tables.load(s, dir, "lineitem"), p,
           "l_orderkey", "l_partkey", numFiles = 16)
       }
       s.read.parquet(path)

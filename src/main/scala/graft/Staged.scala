@@ -1,0 +1,96 @@
+package graft
+
+import java.io.{File, IOException}
+import java.nio.file.{Files, StandardCopyOption}
+import java.util.UUID
+import scala.util.control.NonFatal
+
+/** How a gate artifact derived from a fixture lives under java.io.tmpdir
+  * (indexes, pair tables, stream bootstraps, scaled slices).
+  *
+  * A staged directory `<prefix><tag>` is keyed by the fixture's content
+  * fingerprint, so a regenerated fixture at the same path never serves a
+  * stale copy, and it is trusted only if it carries the [[Marker]] file.
+  * It is built under a unique sibling `<prefix><tag>.tmp-<uuid>`, the
+  * marker is written last, and the whole directory is renamed into place
+  * atomically: a run killed mid-build (Verify's per-query timeout, or
+  * `timeout -k` around the tests and the bench) leaves at most a temp
+  * directory, never a final one that a later run reads as complete.
+  */
+object Staged {
+
+  /** Completion marker. Spark's file listing skips `_`-prefixed names, so
+    * parquet and file-stream readers of the directory never see it. */
+  val Marker = "_STAGED"
+
+  private def root = new File(System.getProperty("java.io.tmpdir"))
+
+  /** The staged directory for `fixtureDir` under `prefix`, built by
+    * `build(path)` on first use. `build` writes everything under `path`
+    * (which it may create or overwrite). Concurrent builders each build
+    * their own temp dir; the first rename wins and the others delete
+    * theirs and use the winner's. An unmarked final directory (torn by a
+    * run killed before staging was marker-gated) is moved aside and
+    * deleted, then the fresh build takes its place. */
+  def dir(prefix: String, fixtureDir: String)(build: String => Unit): String = {
+    val tag = Tables.dataFingerprint(fixtureDir)
+    val fin = new File(root, prefix + tag)
+    def complete = new File(fin, Marker).exists()
+    if (!complete) {
+      sweep(prefix, tag)
+      val tmp = new File(root, s"$prefix$tag.tmp-${UUID.randomUUID()}")
+      try {
+        build(tmp.toString)
+        tmp.mkdirs()
+        Files.createFile(new File(tmp, Marker).toPath)
+        // rename(2) replaces an absent or empty target and fails on a
+        // non-empty one: a marked target means another builder won, an
+        // unmarked one is torn and is moved aside before one retry
+        if (!moved(tmp, fin) && !complete) {
+          val torn = new File(root, s"$prefix$tag.torn-${UUID.randomUUID()}")
+          if (moved(fin, torn)) rm(torn)
+          moved(tmp, fin)
+        }
+      } finally rm(tmp)
+      if (!complete) throw new IOException(s"could not stage $fin")
+    }
+    fin.toString
+  }
+
+  /** A fresh per-run directory `<prefix><nanoTime>` (streaming sinks and
+    * checkpoints, which must start empty). Earlier runs' directories under
+    * the same prefix are swept; this one is kept, since the caller's
+    * DataFrame reads it lazily, and the next run sweeps it. */
+  def runDir(prefix: String): String = {
+    val tag = System.nanoTime().toString
+    sweep(prefix, tag)
+    val run = new File(root, prefix + tag)
+    run.mkdirs()
+    run.toString
+  }
+
+  /** Delete everything under java.io.tmpdir whose name starts with
+    * `prefix`, except `<prefix><keepTag>` and its in-flight temp dirs
+    * (which may belong to a concurrent builder): stale fingerprints would
+    * otherwise accumulate one copy per regenerated fixture. Best-effort:
+    * artifact hygiene must never fail a gate query. */
+  private[graft] def sweep(prefix: String, keepTag: String): Unit = {
+    val keep = prefix + keepTag
+    try Option(root.listFiles()).toSeq.flatten
+      .filter { f =>
+        val n = f.getName
+        n.startsWith(prefix) && n != keep && !n.startsWith(s"$keep.tmp-")
+      }
+      .foreach(rm)
+    catch { case NonFatal(_) => }
+  }
+
+  private def moved(from: File, to: File): Boolean =
+    try { Files.move(from.toPath, to.toPath, StandardCopyOption.ATOMIC_MOVE); true }
+    catch { case _: IOException => false }
+
+  private def rm(f: File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
+    f.delete(); ()
+  }
+}

@@ -50,7 +50,7 @@ object ScaleTrend {
 
   /** Write the `factor`x slice under `out` (documents + embeddings —
     * the tables the flight's queries read). Pure function of the input
-    * data and `factor`; a marker file makes regeneration idempotent. */
+    * data and `factor`; `_SCALE_OK` records the factor. */
   def generate(spark: SparkSession, sfDir: String, out: String,
       factor: Int): Unit = {
     // the rotation cipher has 26 distinct non-identity keys (k % 26):
@@ -90,16 +90,12 @@ object ScaleTrend {
       java.nio.file.Paths.get(s"$out/_SCALE_OK"), s"factor=$factor\n"): Unit
   }
 
-  /** The slice directory for (data, factor), generated on first use.
-    * Keyed by the data fingerprint so regenerated fixtures never serve a
-    * stale slice. */
-  def scaledDir(spark: SparkSession, sfDir: String, factor: Int): String = {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_scale_" +
-      s"${factor}x_${graft.Tables.dataFingerprint(sfDir)}"
-    if (!new java.io.File(s"$out/_SCALE_OK").exists())
-      generate(spark, sfDir, out, factor)
-    out
-  }
+  /** The slice directory for (data, factor), generated on first use and
+    * staged through [[graft.Staged]], so regenerated fixtures never serve
+    * a stale slice and a killed generation is never read. */
+  def scaledDir(spark: SparkSession, sfDir: String, factor: Int): String =
+    graft.Staged.dir(s"graft_scale_${factor}x_", sfDir)(
+      generate(spark, sfDir, _, factor))
 
   /** Min of two back-to-back runs: the per-query times here are small
     * (seconds) and the ratio divides two of them, so one scheduling

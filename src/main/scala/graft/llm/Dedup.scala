@@ -334,13 +334,17 @@ object Dedup {
 
   /** MinHash+LSH near-duplicate pairs, verified with exact Jaccard.
     * Default 128 perms, 32 bands x 4 rows: band-collision probability is
-    * J^4, so recall at J=0.65 is 1-(1-0.65^4)^32 ~ 0.998 (and ~1 above),
-    * while false-positive candidates from incidentally-shared shingles stay
-    * rare — rows-per-band is THE scale knob: with r=2 the candidate set
-    * grows quadratically on corpora with overlapping vocabulary. False
-    * positives are then removed by exact verification, so the output
-    * matches the exact [[jaccardPairs]] result while only doing exact work
-    * on candidates.
+    * J^4, so a pair at Jaccard J shares no band — and is missed — with
+    * probability (1 - J^4)^32: 1.2% at the 0.6 threshold, 0.37% at 0.633,
+    * 0.09% at 0.667, falling fast above. False-positive candidates from
+    * incidentally-shared shingles stay rare — rows-per-band is THE scale
+    * knob: with r=2 the candidate set grows quadratically on corpora with
+    * overlapping vocabulary. Every reported pair is exact-verified, so
+    * the output is a SUBSET of the exact [[jaccardPairs]] result; recall
+    * is probabilistic, per pair, not guaranteed. The estimate pre-filter
+    * below (margin 0.2) can drop further true pairs whose signature
+    * agreement falls far under J. The d03 gate equals the exact result
+    * only because its fixture has no pair that misses.
     */
   def minhashNearDuplicates(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double, ngram: Int = 3, numPerm: Int = 128,
@@ -351,9 +355,10 @@ object Dedup {
     val sigs = scopedCache(minHashSignatures(sh, numPerm))
     val rawCands = lshCandidates(sigs, bands, numPerm / bands)
     // MinHash-estimate pre-filter: sig agreement is an unbiased estimate of
-    // J with sigma = sqrt(J(1-J)/numPerm); a wide safety margin keeps
-    // recall ~1 while discarding the incidental band collisions, so exact
-    // verification only touches near-certain pairs
+    // J with sigma = sqrt(J(1-J)/numPerm) (0.043 at J = 0.6); the margin is
+    // about 4.6 sigma, so a true pair is rarely dropped here while the
+    // incidental band collisions are, and exact verification only touches
+    // near-certain pairs
     val margin = 0.2
     val sa = sigs.select(col("doc_id").as("a_id"), col("sig").as("sig_a"))
     val sb = sigs.select(col("doc_id").as("b_id"), col("sig").as("sig_b"))
@@ -390,9 +395,14 @@ object Dedup {
     * `corpus` must contain every document (old and new) so candidates
     * can be exactly verified; `index` is [[minhashBandIndex]] of the
     * PRE-EXISTING corpus (excluding the batch), built with identical
-    * (ngram, numPerm, bands). With d03's parameters the banding recall
-    * at the threshold is ~1, so the output equals the exact Jaccard join
-    * restricted to pairs touching the batch — the d12 gate's oracle.
+    * (ngram, numPerm, bands). Every reported pair is exact-verified, so
+    * the output is a subset of the exact Jaccard join restricted to pairs
+    * touching the batch. Recall is probabilistic, as in
+    * [[minhashNearDuplicates]]: with d03's parameters a pair at Jaccard J
+    * is missed with probability (1 - J^4)^32 (1.2% at 0.6, 0.09% at
+    * 0.667; this path has no estimate pre-filter). The d12 gate equals
+    * its exact oracle only because the fixture has no pair that misses;
+    * the `dedup_ingest` benchmark's seeds 14 and 49 do have one each.
     */
   def incrementalMinhashNearDuplicates(newDocs: DataFrame, corpus: DataFrame,
       index: DataFrame, idCol: String, textCol: String, threshold: Double,

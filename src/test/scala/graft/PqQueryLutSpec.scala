@@ -19,19 +19,42 @@ class PqQueryLutSpec extends SparkSpec {
     import spark.implicits._
     val rnd = new scala.util.Random(7)
     val cb = Array.fill(numSub, ksz, sub)(rnd.nextDouble() - 0.5)
-    val rows = (0 until 200).map(_ => Array.fill(numSub * sub)(
-      rnd.nextDouble() - 0.5)).map(Tuple1(_))
+    val rows = (0 until 200).map(i => (i, Array.fill(numSub * sub)(
+      rnd.nextDouble() - 0.5)))
     val cbl = cbLiteral(cb)
-    val df = rows.toDF("vn")
-      .withColumn("native", PqQueryLut.queryLut(col("vn"), cb))
-      .withColumn("hof", expr(
+    val base = rows.toDF("i", "vn")
+    // the HOF reference is a CodegenFallback, which would keep the whole
+    // operator out of whole-stage codegen: compute it on its own side
+    val hof = base.select(col("i"), expr(
         s"transform(sequence(0, ${numSub - 1}), m -> " +
           s"transform(sequence(0, ${ksz - 1}), k -> " +
           s"aggregate(sequence(1, $sub), 0D, (a, i) -> " +
           s"a + element_at(vn, m * $sub + i) * " +
-          s"element_at(element_at(element_at($cbl, m + 1), k + 1), i))))"))
-    // bit-for-bit: same sequential fold order, compared as exact doubles
-    assert(df.filter(not(col("native") <=> col("hof"))).count() === 0)
+          s"element_at(element_at(element_at($cbl, m + 1), k + 1), i))))")
+        .as("hof"))
+    // the local input is folded by ConvertToLocalRelation (nullSafeEval);
+    // behind an exchange the expression runs compiled (doGenCode)
+    for ((input, codegen) <- Seq(base -> false, base.repartition(2) -> true)) {
+      val df = input
+        .select(col("i"), PqQueryLut.queryLut(col("vn"), cb).as("native"))
+        .join(hof, "i")
+        .select((col("native") <=> col("hof")).as("same"))
+      if (codegen) {
+        val plan = df.queryExecution.executedPlan
+        assert(plan.exists {
+          case w: WholeStageCodegenExec => w.child.exists(
+            _.expressions.exists(_.exists(_.isInstanceOf[PqQueryLut])))
+          case _ => false
+        }, s"pq_query_lut is not whole-stage compiled:\n$plan")
+      }
+      val fallback = spark.conf.get("spark.sql.codegen.fallback")
+      spark.conf.set("spark.sql.codegen.fallback", "false")
+      val same = try df.collect().map(_.getBoolean(0)) finally
+        spark.conf.set("spark.sql.codegen.fallback", fallback)
+      // bit-for-bit: same sequential fold order, compared as exact doubles
+      assert(same.length === rows.size)
+      assert(same.forall(identity))
+    }
   }
 
   test("short vectors null the out-of-range subspaces (both eval paths)") {

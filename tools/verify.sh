@@ -3,7 +3,7 @@
 # plain java (skips sbt JVM startup per iteration).
 # Usage: tools/verify.sh [sfDir] [outDir]
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
 sbt -batch compile 1>&2
