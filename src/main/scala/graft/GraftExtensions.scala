@@ -24,8 +24,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(_ => StatsOverrideStrategy)
     ext.injectOptimizerRule(_ => AugmentEquiJoinPredicates)
     // SQL-callable custom kernels: `SELECT cosine_sim(a, b)`,
-    // `SELECT rolling_hash(text)` work from any SQL surface (thrift,
-    // connect) without imperative per-session registration
+    // `SELECT rolling_hash(text)`, `SELECT minhash_signature(text, 3, 128)`
+    // work from any SQL surface (thrift, connect) without imperative
+    // per-session registration
     ext.injectFunction((
       new org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim"),
       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
@@ -41,6 +42,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
         require(args.size == 1, "rolling_hash(text) takes one arg")
         graft.functions.RollingHash(args.head)
+      }))
+    ext.injectFunction((
+      new org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_signature"),
+      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
+        classOf[graft.functions.MinHashSignature].getName, "minhash_signature"),
+      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
+        require(args.size == 3 && args.tail.forall(_.foldable),
+          "minhash_signature(text, ngram, numPerm) takes constant ngram and numPerm")
+        graft.functions.MinHashSignature(args.head,
+          args(1).eval().asInstanceOf[Int], args(2).eval().asInstanceOf[Int])
       }))
   }
 }

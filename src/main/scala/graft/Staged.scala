@@ -57,14 +57,26 @@ object Staged {
     fin.toString
   }
 
-  /** A fresh per-run directory `<prefix><nanoTime>` (streaming sinks and
-    * checkpoints, which must start empty). Earlier runs' directories under
-    * the same prefix are swept; this one is kept, since the caller's
-    * DataFrame reads it lazily, and the next run sweeps it. */
+  /** A fresh per-run directory `<prefix><pid>-<nanoTime>` (streaming sinks
+    * and checkpoints, which must start empty). This one is kept, since the
+    * caller's DataFrame reads it lazily. Earlier run directories under the
+    * same prefix are swept only if this JVM made them or their owner
+    * process is gone: a concurrent JVM's live sink is never deleted. A name
+    * with no owner pid (the older `<prefix><nanoTime>` form) counts as
+    * ownerless. */
   def runDir(prefix: String): String = {
-    val tag = System.nanoTime().toString
-    sweep(prefix, tag)
-    val run = new File(root, prefix + tag)
+    val pid = ProcessHandle.current().pid()
+    val run = new File(root, s"$prefix$pid-${System.nanoTime()}")
+    def stale(name: String): Boolean =
+      name.stripPrefix(prefix).split("-", 2) match {
+        case Array(owner, _) => owner.toLongOption.forall(p =>
+          p == pid || !ProcessHandle.of(p).map[Boolean](_.isAlive).orElse(false))
+        case _ => true
+      }
+    try Option(root.listFiles()).toSeq.flatten
+      .filter(f => f.getName.startsWith(prefix) && stale(f.getName))
+      .foreach(rm)
+    catch { case NonFatal(_) => }
     run.mkdirs()
     run.toString
   }

@@ -2,6 +2,8 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.MinHashSignature
+import scala.util.control.NonFatal
 
 /** Document-deduplication operators for large-scale training-data pipelines.
   *
@@ -15,9 +17,12 @@ import org.apache.spark.sql.functions._
   *    stop-shingle skew dominates — `maxShingleDocFreq` drops shingles that
   *    occur in more than N docs (they contribute candidates, not precision;
   *    standard suffix-filtering trick) before the join.
-  *  - MinHash+LSH: signature aggregation is a single groupBy producing K
-  *    min-values; banding turns the quadratic pair space into equality joins
-  *    on (band, bucket); exact-Jaccard verification touches only candidates.
+  *  - MinHash+LSH: each document's K-value signature is one row-local
+  *    native expression ([[graft.functions.MinHashSignature]]) over its
+  *    text — no shingle explode, no shuffle; banding turns the quadratic
+  *    pair space into equality joins on (band, bucket); exact-Jaccard
+  *    verification touches only candidates. Document ids are keys: the
+  *    MinHash operators expect one row per id (see [[minhashBandIndex]]).
   *  - SimHash: 64-bit signature; 16-bit chunk banding (pigeonhole: hamming
   *    distance <= 3 guarantees one of 4 chunks matches exactly).
   *  - embedding near-dup: brute-force O(n^2) baseline kept for oracle
@@ -51,14 +56,14 @@ object Dedup {
   private final case class CacheEntry(cached: DataFrame,
       var slim: Option[DataFrame])
   private def freeEntry(e: CacheEntry): Unit = {
-    try e.cached.unpersist(false) catch { case _: Throwable => }
+    try e.cached.unpersist(false) catch { case NonFatal(_) => }
     e.slim.foreach(s => try {
       s.queryExecution.analyzed match {
         case l: org.apache.spark.sql.execution.LogicalRDD =>
           l.rdd.unpersist(false): Unit
         case _ =>
       }
-    } catch { case _: Throwable => })
+    } catch { case NonFatal(_) => })
   }
   // keyed by the canonicalized PLAN OBJECT, never its string rendering:
   // plan.toString truncates past spark.sql.maxPlanStringLength, so two
@@ -86,13 +91,15 @@ object Dedup {
   /** [[scopedCache]] returning a SLIM-PLAN view of the cached relation: a
     * lazily local-checkpointed wrapper whose logical plan is a one-node
     * LogicalRDD (materialized from the cache on first use, block-backed
-    * afterwards). For relations whose plan TREE is huge but whose DATA is
-    * small — the dedup candidate sets, whose trees embed the 128-aggregate
-    * signature pipeline several times over — consumers would otherwise pay
-    * the ANALYZER for the whole tree again on every chained operation
-    * (measured: ~0.5 s of driver time per d12 construction). Same bounded
-    * LRU lifecycle; the wrapper is built once per entry so repeated calls
-    * share one set of checkpoint blocks. */
+    * afterwards). For relations whose plan TREE is large but whose DATA
+    * is small — the dedup candidate sets, whose trees embed the banding
+    * self-joins and signature scans several times over — consumers would
+    * otherwise pay the ANALYZER and the cache plan-matching for the whole
+    * tree again on every chained operation. Measured with the native
+    * signature expression in place: plain [[scopedCache]] at the three
+    * dedup call sites made a `dedup_ingest` batch cost 3.9 CPU-s instead
+    * of 2.8. Same bounded LRU lifecycle; the wrapper is built once per
+    * entry so repeated calls share one set of checkpoint blocks. */
   private[graft] def scopedCacheSlim(df: DataFrame): DataFrame =
     liveCaches.synchronized {
       df.queryExecution.analyzed match {
@@ -235,12 +242,10 @@ object Dedup {
     // the candidate relation's DAG (banding + estimate filter) must run
     // exactly once, not once per consumer — AND its logical plan must
     // not ride into the verification joins: the candidate tree embeds
-    // the signature pipeline (a 128-aggregate subtree) several times
-    // over, and every chained .join() below re-runs the ANALYZER over
-    // the whole accumulated tree (measured: ~0.5 s of pure driver-side
-    // plan construction per d12 build, the single largest cost of the
-    // query). The slim cached view keeps the run-once semantics while
-    // handing downstream a one-node plan.
+    // the banding self-joins and signature scans several times over, and
+    // every chained .join() below re-runs the ANALYZER over the whole
+    // accumulated tree. The slim cached view keeps the run-once semantics
+    // while handing downstream a one-node plan.
     val candidates = scopedCacheSlim(candidatesRaw)
     val hashed = shingleKey(sh)
     // Set sizes as a separate tiny aggregate (one row per doc, partial
@@ -267,48 +272,25 @@ object Dedup {
       .select(col("a_id"), col("b_id"), round(col("jaccard"), 4).as("jaccard"))
   }
 
-  /** Mersenne prime 2^31-1: the modulus of the universal-hash family used
-    * as MinHash "permutations". The mod is what makes pi(h) = (a*h+b) mod P
-    * order-scrambling — WITHOUT it, a*h+b with a>0 is monotonic in h, the
-    * argmin of every "permutation" is the one shingle with the smallest
-    * base hash, all signature positions encode that single shingle, and
-    * signature agreement degenerates to a 0/1 coin whose heads-probability
-    * is J (pairs collide iff they share the globally-minimal shingle).
-    * That degenerate form passes small fixtures with probability ~prod(J_i)
-    * and silently guts recall at scale — a real bug caught in round 4 when
-    * re-hashing shingles re-rolled the argmins.
-    */
-  private val MersenneP = 2147483647L
-
-  /** Deterministic universal-hash parameters for MinHash (java.util.Random
-    * LCG is spec-fixed, so signatures are reproducible across runs/JVMs).
-    * a in [1, P), b in [0, P): a*h+b <= (P-1)^2 + P-1 < 2^62 stays well
-    * inside Long range — ANSI mode (Spark 4 default) turns silent
-    * wraparound into a runtime error, so the arithmetic must genuinely not
-    * overflow before the pmod.
-    */
-  private def perms(numPerm: Int, seed: Long = 42L): Seq[(Long, Long)] = {
-    val rnd = new java.util.Random(seed)
-    def next(bound: Long): Long = math.floorMod(rnd.nextLong(), bound)
-    Seq.fill(numPerm)((next(MersenneP - 1) + 1, next(MersenneP)))
-  }
-
   /** MinHash signatures: (doc_id, sig: array<bigint>) with `numPerm` values,
-    * sig_i = min over shingles of (a_i*h + b_i) mod P — a genuine
-    * approximate permutation of the 31-bit base-hash space, so
-    * P(sig_i(A) = sig_i(B)) = J(A,B) independently per position.
-    * One shuffle (groupBy doc_id) with partial min combiners map-side.
+    * sig_i = min over the text's `ngram`-word shingles of (a_i*h + b_i)
+    * mod P — a genuine approximate permutation of the 31-bit base-hash
+    * space, so P(sig_i(A) = sig_i(B)) = J(A,B) independently per position.
+    * One narrow projection: [[graft.functions.MinHashSignature]] computes
+    * each row's signature in place (no explode, no shuffle, no
+    * aggregate). Rows whose text is null or shorter than `ngram` words
+    * have no shingle and no signature, and are dropped. One output row per
+    * input row: two rows sharing an id keep two signatures.
     */
-  def minHashSignatures(sh: DataFrame, numPerm: Int): DataFrame = {
-    val base = sh.withColumn("h",
-      pmod(hash(col("shingle")).cast("bigint"), lit(MersenneP)))
-    val mins: Seq[Column] = perms(numPerm).zipWithIndex.map { case ((a, b), i) =>
-      min(pmod(col("h") * lit(a) + lit(b), lit(MersenneP))).as(s"m$i")
-    }
-    base.groupBy("doc_id").agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"),
-        array((0 until numPerm).map(i => col(s"m$i")): _*).as("sig"))
-  }
+  def minHashSignatures(docs: DataFrame, idCol: String, textCol: String,
+      ngram: Int, numPerm: Int): DataFrame =
+    // the row filter tests the word count, not `sig IS NOT NULL`: the
+    // optimizer pushes a filter on `sig` below the projection as a second
+    // copy of the signature expression, which would compute every
+    // signature twice
+    docs.where(size(split(col(textCol), " ")) >= ngram)
+      .select(col(idCol).as("doc_id"),
+        MinHashSignature.minHashSignature(col(textCol), ngram, numPerm).as("sig"))
 
   /** Banded signature rows (doc_id, band, bh): one row per document and
     * band, bh = hash of the band's signature slice. This IS the
@@ -345,14 +327,21 @@ object Dedup {
     * below (margin 0.2) can drop further true pairs whose signature
     * agreement falls far under J. The d03 gate equals the exact result
     * only because its fixture has no pair that misses.
+    *
+    * Ids are keys: `docs` must hold one row per `idCol` value. Two rows
+    * sharing an id get one signature each (banding never pairs them with
+    * each other), while verification counts the shingles of both rows
+    * under the one id, so their Jaccard values are not exact.
     */
   def minhashNearDuplicates(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double, ngram: Int = 3, numPerm: Int = 128,
       bands: Int = 32): DataFrame = {
+    // shingles feed exact verification only
     val sh = scopedCache(shingles(docs, idCol, textCol, ngram))
-    // cached: the banding self-join would otherwise recompute the signature
-    // aggregation once per side (tiny relation, numPerm longs per doc)
-    val sigs = scopedCache(minHashSignatures(sh, numPerm))
+    // cached: the banding self-join and the estimate joins read the
+    // signatures four times (tiny relation, numPerm longs per doc)
+    val sigs = scopedCache(minHashSignatures(docs, idCol, textCol, ngram,
+      numPerm))
     val rawCands = lshCandidates(sigs, bands, numPerm / bands)
     // MinHash-estimate pre-filter: sig agreement is an unbiased estimate of
     // J with sigma = sqrt(J(1-J)/numPerm) (0.043 at J = 0.6); the margin is
@@ -377,11 +366,14 @@ object Dedup {
     * write it bucketed by (band, bh) — the per-batch probe join is then
     * shuffle-free on the index side, and the index grows by appending
     * each batch's [[bandSignatures]].
+    *
+    * Ids are keys: a document id must name one row. Each row is banded
+    * on its own, so two rows sharing an id index two signatures under
+    * that id (the id collides if either row does).
     */
   def minhashBandIndex(docs: DataFrame, idCol: String, textCol: String,
       ngram: Int = 3, numPerm: Int = 128, bands: Int = 32): DataFrame =
-    bandSignatures(
-      minHashSignatures(shingles(docs, idCol, textCol, ngram), numPerm),
+    bandSignatures(minHashSignatures(docs, idCol, textCol, ngram, numPerm),
       bands, numPerm / bands)
 
   /** Incremental MinHash+LSH near-duplicates: all near-dup pairs that
@@ -403,13 +395,19 @@ object Dedup {
     * 0.667; this path has no estimate pre-filter). The d12 gate equals
     * its exact oracle only because the fixture has no pair that misses;
     * the `dedup_ingest` benchmark's seeds 14 and 49 do have one each.
+    *
+    * Ids are keys, in `newDocs`, `corpus` and `index` alike: a batch row
+    * whose id repeats another batch row is banded per row, and exact
+    * verification counts the shingles of every corpus row under an id
+    * together, so a repeated id gets no exact Jaccard.
     */
   def incrementalMinhashNearDuplicates(newDocs: DataFrame, corpus: DataFrame,
       index: DataFrame, idCol: String, textCol: String, threshold: Double,
       ngram: Int = 3, numPerm: Int = 128, bands: Int = 32): DataFrame = {
-    val newSigs = scopedCache(minHashSignatures(
-      shingles(newDocs, idCol, textCol, ngram), numPerm))
-    val newBanded = scopedCache(bandSignatures(newSigs, bands, numPerm / bands))
+    // cached: both probes read the batch's banded signatures
+    val newBanded = scopedCache(bandSignatures(
+      minHashSignatures(newDocs, idCol, textCol, ngram, numPerm),
+      bands, numPerm / bands))
     val n = newBanded.select(col("doc_id").as("n_id"), col("band"), col("bh"))
     val o = index.select(col("doc_id").as("o_id"), col("band"), col("bh"))
     // new-vs-old collisions; the self-pair guard matters when the index

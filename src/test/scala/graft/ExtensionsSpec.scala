@@ -50,6 +50,13 @@ class ExtensionsSpec extends AnyFunSuite {
           org.apache.spark.sql.functions.col("t")))
         .head().getLong(0)
       assert(viaSql === viaApi)
+      val sigSql = spark.sql("SELECT minhash_signature('a b c d', 3, 16) AS s")
+        .head().getSeq[Long](0)
+      val sigApi = Seq("a b c d").toDF("t")
+        .select(graft.functions.MinHashSignature.minHashSignature(
+          org.apache.spark.sql.functions.col("t"), 3, 16))
+        .head().getSeq[Long](0)
+      assert(sigSql.size === 16 && sigSql === sigApi)
     } finally {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()

@@ -33,7 +33,7 @@ class LlmOpsSpec extends SparkSpec {
     val sh = Dedup.shingles(two, "doc_id", "text", 3)
     val jac = Dedup.jaccardPairs(sh, 0.0).select("jaccard")
       .as[Double].head()
-    val sigs = Dedup.minHashSignatures(sh, 128).collect()
+    val sigs = Dedup.minHashSignatures(two, "doc_id", "text", 3, 128).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val est = sigs(1L).zip(sigs(2L)).count { case (a, b) => a == b } / 128.0
     assert(jac > 0.2 && jac < 0.8, s"fixture jaccard $jac out of range")

@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins the staging rules of [[Staged]] on plain files (no Spark): a
   * directory is trusted only with its completion marker, a torn or failed
   * build leaves nothing a later call trusts, and sweeps spare this tag's
-  * in-flight builds and the current run. Each test uses its own prefix
-  * under java.io.tmpdir and removes what it staged. */
+  * in-flight builds, the current run and other live processes' runs. Each
+  * test uses its own prefix under java.io.tmpdir and removes what it
+  * staged. */
 class StagedSpec extends AnyFunSuite {
 
   private val tmp = new File(System.getProperty("java.io.tmpdir"))
@@ -102,6 +103,24 @@ class StagedSpec extends AnyFunSuite {
       assert(second !== first)
       assert(new File(second).isDirectory)
       assert(entries(prefix) === Set(new File(second).getName))
+    }
+  }
+
+  test("runDir spares a live foreign process's run and sweeps ownerless ones") {
+    withFixture { (_, prefix, _) =>
+      val parent = ProcessHandle.current().parent()
+      assume(parent.isPresent, "no parent process to stand in for another JVM")
+      // a run of a live process (this JVM's parent), one of a pid that
+      // cannot be alive, and one in the older name form with no owner pid
+      val live = s"$prefix${parent.get.pid()}-1"
+      writeData(new File(tmp, live).toString)
+      writeData(new File(tmp, s"$prefix${Int.MaxValue}-1").toString)
+      writeData(new File(tmp, s"${prefix}123").toString)
+      val own = Staged.runDir(prefix)
+      writeData(own)
+      val next = Staged.runDir(prefix)
+      assert(entries(prefix) === Set(live, new File(next).getName))
+      assert(new File(tmp, s"$live/part-0.parquet").exists())
     }
   }
 }
