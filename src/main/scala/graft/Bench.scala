@@ -87,8 +87,13 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // optional comma-separated subset override for isolated measurements
-    val selected = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
+    // optional comma-separated subset override for isolated measurements;
+    // a subset run skips the full-run work (scale trend, canary-floor
+    // persistence) so a per-query before/after check costs seconds, and
+    // leaves the tracked floor file as it was
+    val subsetEnv = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
+    val subset = subsetEnv.isDefined
+    val selected = subsetEnv
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(headline)
     val spark = SparkSession.builder()
@@ -212,7 +217,7 @@ object Bench {
       graft.bench.CanaryFloor.read(floorFileText(), floorKey)
     val priorHotFloor: Option[Double] =
       graft.bench.CanaryFloor.read(floorFileText(), hotFloorKey)
-    def persistFloor(): Unit = try {
+    def persistFloor(): Unit = if (!subset) try {
       Seq(floorKey -> canaryMinObserved, hotFloorKey -> hotMinObserved)
         .foreach { case (k, obs) =>
           if (obs < Double.MaxValue)
@@ -1473,8 +1478,10 @@ object Bench {
     val kitSections: Map[String, String] = kitAcc.toMap
     writeArtifact(artifactLine(kitSections, "{}"))
     // scale-trend flight at a larger SF (see ScaleTrend's scaladoc):
-    // last, so its one-shot timings run on the hottest JVM of the run
-    val scaleTrend = graft.bench.ScaleTrend.section(spark, sfDir)
+    // last, so its one-shot timings run on the hottest JVM of the run;
+    // a subset run emits it empty, keeping the artifact's key set
+    val scaleTrend =
+      if (subset) "{}" else graft.bench.ScaleTrend.section(spark, sfDir)
     val line = artifactLine(kitSections, scaleTrend)
     writeArtifact(line)
     artifactPrinted = true

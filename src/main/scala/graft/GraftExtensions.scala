@@ -24,7 +24,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(_ => StatsOverrideStrategy)
     ext.injectOptimizerRule(_ => AugmentEquiJoinPredicates)
     // SQL-callable custom kernels: `SELECT cosine_sim(a, b)`,
-    // `SELECT rolling_hash(text)`, `SELECT minhash_signature(text, 3, 128)`
+    // `SELECT rolling_hash(text)`, `SELECT minhash_signature(text, 3, 128)`,
+    // `SELECT ngram_jaccard(a, b, 3)`
     // work from any SQL surface (thrift, connect) without imperative
     // per-session registration
     ext.injectFunction((
@@ -52,6 +53,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "minhash_signature(text, ngram, numPerm) takes constant ngram and numPerm")
         graft.functions.MinHashSignature(args.head,
           args(1).eval().asInstanceOf[Int], args(2).eval().asInstanceOf[Int])
+      }))
+    ext.injectFunction((
+      new org.apache.spark.sql.catalyst.FunctionIdentifier("ngram_jaccard"),
+      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
+        classOf[graft.functions.NgramJaccard].getName, "ngram_jaccard"),
+      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
+        require(args.size == 3 && args(2).foldable,
+          "ngram_jaccard(a, b, ngram) takes two texts and a constant ngram")
+        graft.functions.NgramJaccard(args.head, args(1),
+          args(2).eval().asInstanceOf[Int])
       }))
   }
 }

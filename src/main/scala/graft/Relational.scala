@@ -791,7 +791,7 @@ object Relational {
         val committed = new java.io.File(dataDir, "_SUCCESS").exists()
         if (!s.catalog.tableExists(name) || !committed) {
           if (s.catalog.tableExists(name)) s.sql(s"DROP TABLE `$name`")
-          Staged.sweep(s"graft_b01_${t}_", tag)
+          Staged.sweep(s"graft_b01_${t}_", tag, dir)
           Tables.load(s, dir, t).write.mode("overwrite").format("parquet")
             .option("path", dataDir.getAbsolutePath)
             .bucketBy(8, key).sortBy(key).saveAsTable(name)

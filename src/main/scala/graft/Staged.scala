@@ -19,8 +19,10 @@ import scala.util.control.NonFatal
   */
 object Staged {
 
-  /** Completion marker. Spark's file listing skips `_`-prefixed names, so
-    * parquet and file-stream readers of the directory never see it. */
+  /** Completion marker, holding the canonical path of the fixture the
+    * directory was built from. Spark's file listing skips `_`-prefixed
+    * names, so parquet and file-stream readers of the directory never see
+    * it. */
   val Marker = "_STAGED"
 
   private def root = new File(System.getProperty("java.io.tmpdir"))
@@ -37,12 +39,13 @@ object Staged {
     val fin = new File(root, prefix + tag)
     def complete = new File(fin, Marker).exists()
     if (!complete) {
-      sweep(prefix, tag)
+      sweep(prefix, tag, fixtureDir)
       val tmp = new File(root, s"$prefix$tag.tmp-${UUID.randomUUID()}")
       try {
         build(tmp.toString)
         tmp.mkdirs()
-        Files.createFile(new File(tmp, Marker).toPath)
+        Files.writeString(new File(tmp, Marker).toPath,
+          new File(fixtureDir).getCanonicalPath)
         // rename(2) replaces an absent or empty target and fails on a
         // non-empty one: a marked target means another builder won, an
         // unmarked one is torn and is moved aside before one retry
@@ -81,20 +84,31 @@ object Staged {
     run.toString
   }
 
-  /** Delete everything under java.io.tmpdir whose name starts with
-    * `prefix`, except `<prefix><keepTag>` and its in-flight temp dirs
-    * (which may belong to a concurrent builder): stale fingerprints would
-    * otherwise accumulate one copy per regenerated fixture. Best-effort:
+  /** Delete the stale fingerprints of `fixtureDir` that java.io.tmpdir
+    * holds under `prefix`, which would otherwise accumulate one copy per
+    * regenerated fixture. `<prefix><keepTag>` and its in-flight temp dirs
+    * (which may belong to a concurrent builder) stay. Another tag goes
+    * only if its marker names the same fixture (whose data has since
+    * changed) or names none (missing, unreadable, or empty as in
+    * directories staged before markers named their fixture), so fixtures
+    * sharing one tmpdir keep each other's artifacts. Best-effort:
     * artifact hygiene must never fail a gate query. */
-  private[graft] def sweep(prefix: String, keepTag: String): Unit = {
+  private[graft] def sweep(prefix: String, keepTag: String,
+      fixtureDir: String): Unit = {
     val keep = prefix + keepTag
-    try Option(root.listFiles()).toSeq.flatten
-      .filter { f =>
-        val n = f.getName
-        n.startsWith(prefix) && n != keep && !n.startsWith(s"$keep.tmp-")
-      }
-      .foreach(rm)
-    catch { case NonFatal(_) => }
+    def owner(f: File): String =
+      try Files.readString(new File(f, Marker).toPath)
+      catch { case NonFatal(_) => "" }
+    try {
+      val fixture = new File(fixtureDir).getCanonicalPath
+      Option(root.listFiles()).toSeq.flatten
+        .filter { f =>
+          val n = f.getName
+          n.startsWith(prefix) && n != keep && !n.startsWith(s"$keep.tmp-") &&
+            Set("", fixture).contains(owner(f))
+        }
+        .foreach(rm)
+    } catch { case NonFatal(_) => }
   }
 
   private def moved(from: File, to: File): Boolean =

@@ -1,6 +1,7 @@
 package graft.bench
 
 import scala.collection.concurrent.TrieMap
+import scala.util.control.NonFatal
 
 /** Disk-persisted ACTUAL join-node cardinalities for the workload-kit
   * bound-tightness rows.
@@ -43,7 +44,7 @@ final class KitActuals(path: String) {
     * measured entry. */
   def adoptSentinel(label: String, sha: String, root: Double): Unit =
     if (cache.putIfAbsent((label, sha), (root, Map.empty)).isEmpty)
-      try persist() catch { case _: Throwable => }
+      try persist() catch { case NonFatal(_) => }
 
   /** Merge `nodes` into the entry (keeps actuals for table subsets an
     * earlier tree shape produced) and persist atomically. Merge ONLY
@@ -56,7 +57,7 @@ final class KitActuals(path: String) {
     val merged = cache.get((label, sha))
       .map { case (_, old) => old ++ nodes }.getOrElse(nodes)
     cache.put((label, sha), (root, merged))
-    try persist() catch { case _: Throwable => }
+    try persist() catch { case NonFatal(_) => }
   }
 
   /** Replace the entry WHOLESALE (drops every previously stored node
@@ -68,7 +69,7 @@ final class KitActuals(path: String) {
   def putReplacing(label: String, sha: String, root: Double,
       nodes: Map[String, Double]): Unit = {
     cache.put((label, sha), (root, nodes))
-    try persist() catch { case _: Throwable => }
+    try persist() catch { case NonFatal(_) => }
   }
 
   def size: Int = cache.size
@@ -103,7 +104,7 @@ final class KitActuals(path: String) {
           items.size
         case _ => 0
       }
-    } catch { case _: Throwable => 0 }
+    } catch { case NonFatal(_) => 0 }
   }
 
   private def persist(): Unit = {

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftShims}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
@@ -16,10 +16,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Bit-identical to the relational formulation it replaces
   * (`split(text, ' ')`, `xxhash64(slice(w, i+1, n))` per shingle,
   * h = `pmod(hash(shingle), P)`, then `min(pmod(h*a_i + b_i, P))` per
-  * position grouped by document): words are `UTF8String.split(" ", -1)`
-  * (empty words from leading, trailing or doubled spaces included), a
-  * shingle's key is `XXH64.hashUnsafeBytes` folded over its words from
-  * seed 42, and h is `Murmur3_x86_32.hashLong(key, 42)` mod P. Repeated
+  * position grouped by document): words and shingle keys come from
+  * [[Shingles]] (empty words from leading, trailing or doubled spaces
+  * included), and h is `Murmur3_x86_32.hashLong(key, 42)` mod P. Repeated
   * shingles need no distinct: a minimum is idempotent. Null text, or text
   * of fewer than `ngram` words (no shingle), yields null — the rows the
   * relational path's `size(w) >= n` filter dropped.
@@ -96,27 +95,18 @@ object MinHashSignature {
     Seq.fill(numPerm)((next(MersenneP - 1) + 1, next(MersenneP)))
   }
 
-  private val Space = UTF8String.fromString(" ")
-
   /** Shared by eval and codegen: the signature of `text`, or null when it
     * has fewer than `ngram` words. */
   def kernel(text: UTF8String, ngram: Int, a: Array[Long],
       b: Array[Long]): Array[Long] = {
-    val w = text.split(Space, -1)
+    val w = Shingles.words(text)
     val shingles = w.length - ngram + 1
     if (shingles <= 0) return null
     val k = a.length
     val sig = Array.fill(k)(Long.MaxValue)
     var i = 0
     while (i < shingles) {
-      var key = 42L
-      var j = i
-      while (j < i + ngram) {
-        val s = w(j)
-        key = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset,
-          s.numBytes, key)
-        j += 1
-      }
+      val key = Shingles.shingleKey(w, i, ngram)
       val h = math.floorMod(Murmur3_x86_32.hashLong(key, 42).toLong, MersenneP)
       var p = 0
       while (p < k) {

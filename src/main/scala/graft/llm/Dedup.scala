@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.MinHashSignature
+import graft.functions.{MinHashSignature, NgramJaccard}
 import scala.util.control.NonFatal
 
 /** Document-deduplication operators for large-scale training-data pipelines.
@@ -21,8 +21,10 @@ import scala.util.control.NonFatal
   *    native expression ([[graft.functions.MinHashSignature]]) over its
   *    text — no shingle explode, no shuffle; banding turns the quadratic
   *    pair space into equality joins on (band, bucket); exact-Jaccard
-  *    verification touches only candidates. Document ids are keys: the
-  *    MinHash operators expect one row per id (see [[minhashBandIndex]]).
+  *    verification ([[verifyPairs]]) touches only candidates, as one
+  *    native expression ([[graft.functions.NgramJaccard]]) over each
+  *    pair's two texts. Document ids are keys: the MinHash operators
+  *    expect one row per id (see [[minhashBandIndex]]).
   *  - SimHash: 64-bit signature; 16-bit chunk banding (pigeonhole: hamming
   *    distance <= 3 guarantees one of 4 chunks matches exactly).
   *  - embedding near-dup: brute-force O(n^2) baseline kept for oracle
@@ -103,7 +105,7 @@ object Dedup {
   private[graft] def scopedCacheSlim(df: DataFrame): DataFrame =
     liveCaches.synchronized {
       df.queryExecution.analyzed match {
-        // already slim (e.g. re-entering through verifyJaccard) — as-is
+        // already slim (a caller handing a slim view back in) — as-is
         case _: org.apache.spark.sql.execution.LogicalRDD => df
         case analyzed =>
           val key = analyzed.canonicalized
@@ -227,47 +229,53 @@ object Dedup {
     * already hashed — a second xxhash64 would be a redundant re-hash with
     * identical join semantics (equality on h(x) vs on x matches the same
     * pairs up to vanishing collisions). Do not "simplify" the string
-    * branch away: both representations flow into [[verifyJaccard]].
+    * branch away: [[jaccardPairs]] accepts both representations.
     */
   private def shingleKey(sh: DataFrame): DataFrame =
     if (sh.schema("shingle").dataType == org.apache.spark.sql.types.StringType)
       sh.select(col("doc_id"), xxhash64(col("shingle")).as("shingle"))
     else sh.select(col("doc_id"), col("shingle"))
 
-  /** Exact Jaccard evaluated only on a candidate pair set (verification
-    * stage for the LSH paths). Candidates: (a_id, b_id).
+  /** Exact n-gram Jaccard evaluated only on a candidate pair set (the
+    * verification stage of the LSH paths). Candidates: (a_id, b_id) of
+    * `docs`' `idCol` values, repeats allowed (each distinct pair is
+    * verified once). Output: (a_id, b_id, jaccard) for the pairs at or
+    * above `threshold`, jaccard rounded to 4 places.
+    *
+    * Only candidate documents are touched: a broadcast semi-join of
+    * `docs` to the candidates' id set (collision-sized) prunes the scan in
+    * place, each pair gets both texts, and
+    * [[graft.functions.NgramJaccard]] computes the Jaccard of their
+    * distinct shingle-key sets in one row-local expression. A text with
+    * fewer than `ngram` words has no shingle and no Jaccard. Ids are keys:
+    * a candidate whose id names several rows of `docs` gets one output
+    * row per pairing of their texts.
     */
-  def verifyJaccard(sh: DataFrame, candidatesRaw: DataFrame,
-      threshold: Double): DataFrame = {
+  def verifyPairs(candidates: DataFrame, docs: DataFrame, idCol: String,
+      textCol: String, ngram: Int, threshold: Double): DataFrame = {
     // the candidate relation's DAG (banding + estimate filter) must run
     // exactly once, not once per consumer — AND its logical plan must
-    // not ride into the verification joins: the candidate tree embeds
-    // the banding self-joins and signature scans several times over, and
-    // every chained .join() below re-runs the ANALYZER over the whole
-    // accumulated tree. The slim cached view keeps the run-once semantics
-    // while handing downstream a one-node plan.
-    val candidates = scopedCacheSlim(candidatesRaw)
-    val hashed = shingleKey(sh)
-    // Set sizes as a separate tiny aggregate (one row per doc, partial
-    // combiners map-side, no sort) joined onto the AGGREGATED pair
-    // relation: the intersection join legs stay narrow (16 bytes/row) and
-    // nothing sorts the full shingle relation. (An earlier variant
-    // carried sizes inline via count().over(partitionBy(doc_id)); that
-    // window shuffles AND sorts the entire shingle relation — and here,
-    // unlike jaccardPairs, the relation is not cached, so each join leg
-    // re-ran the window. Measured: d03 driver-env medians regressed 2-3x.)
-    val sizes = hashed.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-    val a = hashed.select(col("doc_id").as("a_id"), col("shingle"))
-    val b = hashed.select(col("doc_id").as("b_id2"),
-      col("shingle").as("shingle_b"))
-    candidates
-      .join(a, "a_id")
-      .join(b, col("b_id") === col("b_id2") && col("shingle") === col("shingle_b"))
-      .groupBy("a_id", "b_id").agg(count(lit(1)).as("inter"))
-      .join(sizes.select(col("doc_id").as("a_id"), col("n_sh").as("n_a")), "a_id")
-      .join(sizes.select(col("doc_id").as("b_id"), col("n_sh").as("n_b")), "b_id")
-      .withColumn("jaccard",
-        col("inter") / (col("n_a") + col("n_b") - col("inter")))
+    // not ride into the id set, the semi-join and both text joins: the
+    // candidate tree embeds the banding self-joins and signature scans
+    // several times over, and every chained operation below re-runs the
+    // ANALYZER over the whole accumulated tree. The slim cached view
+    // keeps the run-once semantics while handing downstream a one-node
+    // plan.
+    val cands = scopedCacheSlim(candidates.select("a_id", "b_id").distinct())
+    val touched = cands.select(col("a_id").as("t_id"))
+      .union(cands.select(col("b_id").as("t_id"))).distinct()
+    val texts = docs
+      .join(broadcast(touched), docs(idCol) === touched("t_id"), "left_semi")
+      .select(col(idCol).as("t_id"), col(textCol).as("t_text"))
+    cands
+      .join(texts.as("ta"), col("a_id") === col("ta.t_id"))
+      .join(texts.as("tb"), col("b_id") === col("tb.t_id"))
+      // explode of a one-element array: a filter on a projected column is
+      // pushed below the projection (here into the join condition) as a
+      // second copy of the expression, while a filter on a generated
+      // column stays above the Generate — each Jaccard is computed once
+      .select(col("a_id"), col("b_id"), explode(array(NgramJaccard.ngramJaccard(
+        col("ta.t_text"), col("tb.t_text"), ngram))).as("jaccard"))
       .filter(col("jaccard") >= threshold)
       .select(col("a_id"), col("b_id"), round(col("jaccard"), 4).as("jaccard"))
   }
@@ -330,14 +338,13 @@ object Dedup {
     *
     * Ids are keys: `docs` must hold one row per `idCol` value. Two rows
     * sharing an id get one signature each (banding never pairs them with
-    * each other), while verification counts the shingles of both rows
-    * under the one id, so their Jaccard values are not exact.
+    * each other), and a candidate pair through that id is verified once
+    * per pairing of its rows' texts ([[verifyPairs]]), so it can be
+    * reported once per pairing that reaches the threshold.
     */
   def minhashNearDuplicates(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double, ngram: Int = 3, numPerm: Int = 128,
       bands: Int = 32): DataFrame = {
-    // shingles feed exact verification only
-    val sh = scopedCache(shingles(docs, idCol, textCol, ngram))
     // cached: the banding self-join and the estimate joins read the
     // signatures four times (tiny relation, numPerm longs per doc)
     val sigs = scopedCache(minHashSignatures(docs, idCol, textCol, ngram,
@@ -356,7 +363,7 @@ object Dedup {
         s"aggregate(zip_with(sig_a, sig_b, (x, y) -> if(x = y, 1, 0)), 0, (acc, v) -> acc + v) / cast($numPerm as double)"))
       .filter(col("est") >= threshold - margin)
       .select("a_id", "b_id")
-    verifyJaccard(sh, cands, threshold)
+    verifyPairs(cands, docs, idCol, textCol, ngram, threshold)
   }
 
   /** Banded MinHash signature index of a corpus: (doc_id, band, bh), the
@@ -398,8 +405,9 @@ object Dedup {
     *
     * Ids are keys, in `newDocs`, `corpus` and `index` alike: a batch row
     * whose id repeats another batch row is banded per row, and exact
-    * verification counts the shingles of every corpus row under an id
-    * together, so a repeated id gets no exact Jaccard.
+    * verification ([[verifyPairs]]) pairs every corpus row under one
+    * candidate id with every row under the other, so a repeated id gets
+    * one Jaccard per pairing of texts.
     */
   def incrementalMinhashNearDuplicates(newDocs: DataFrame, corpus: DataFrame,
       index: DataFrame, idCol: String, textCol: String, threshold: Double,
@@ -429,24 +437,11 @@ object Dedup {
     val vsNew = n.join(broadcast(m), Seq("band", "bh"))
       .filter(col("n_id") < col("m_id"))
       .select(col("n_id").as("a_id"), col("m_id").as("b_id"))
-    // slim cached view: the candidate tree (banding joins over the
-    // signature pipeline) would otherwise ride — several times — into
-    // the touched-id set, the corpus semi-join AND the verification
-    // joins, and each downstream Dataset operation re-analyzes it
-    val cands = scopedCacheSlim(vsOld.union(vsNew).distinct())
-    // exact verification touches only candidate documents: a BROADCAST
-    // semi-join (the candidate id set is collision-sized) prunes the
-    // corpus scan in place — never an exchange of the corpus by id
-    val touched = cands.select(col("a_id").as("doc_id"))
-      .union(cands.select(col("b_id").as("doc_id"))).distinct()
-    val docsTouched = corpus
-      .join(broadcast(touched),
-        corpus(idCol).cast("bigint") === touched("doc_id"), "left_semi")
-    // cached: verification reads the shingle relation three times (sizes
-    // + both intersection legs) — uncached, each leg would re-run the
-    // semi-join and corpus scan
-    verifyJaccard(scopedCache(shingles(docsTouched, idCol, textCol, ngram)),
-      cands, threshold)
+    // exact verification touches only candidate documents: verifyPairs
+    // prunes the corpus scan with a BROADCAST semi-join on the
+    // collision-sized candidate id set — never an exchange of the corpus
+    // by id
+    verifyPairs(vsOld.union(vsNew), corpus, idCol, textCol, ngram, threshold)
   }
 
   /** MinHash+LSH near-duplicates with exact-duplicate pre-collapse — the
@@ -530,8 +525,9 @@ object Dedup {
     val cands = a.join(b, Seq("chunk", "cv"))
       .filter(col("a_id") < col("b_id"))
       .filter(bit_count(col("sig_a").bitwiseXOR(col("sig_b"))) <= maxHamming)
-      .select("a_id", "b_id").distinct()
-    verifyJaccard(sh, cands, jaccardThreshold)
+    // exact verification reads the texts: string shingles and word
+    // slices name the same set, so the Jaccard is the one of `sh`'s sets
+    verifyPairs(cands, docs, idCol, textCol, ngram, jaccardThreshold)
   }
 
   /** Brute-force embedding cosine near-duplicates (tiny-data baseline; the

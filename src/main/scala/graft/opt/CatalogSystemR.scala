@@ -3,6 +3,7 @@ package graft.opt
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.expressions._
+import scala.util.control.NonFatal
 
 /** Textbook System-R cardinality estimation over SPARK'S OWN catalog
   * statistics — the honest "what a native Spark deployment would think"
@@ -117,6 +118,6 @@ object CatalogSystemR {
             cs.distinctCount.map(c -> _.toLong) },
           st.colStats.flatMap { case (c, cs) =>
             cs.nullCount.map(c -> _.toLong) })
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(_) => None }
     }.toMap
 }

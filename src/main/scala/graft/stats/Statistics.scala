@@ -1,6 +1,7 @@
 package graft.stats
 
 import scala.collection.concurrent.TrieMap
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{GraftShims, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
@@ -62,7 +63,7 @@ final class EmulatedStatistics(spark: SparkSession,
         loadFrom(path)
         persistTo(path)
       }
-    } catch { case _: Throwable => }
+    } catch { case NonFatal(_) => }
     EmulatedStatistics.retentionSweep(path)
   }
   private val walAppends = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -125,7 +126,7 @@ final class EmulatedStatistics(spark: SparkSession,
   private def persistNew(k: (String, String), v: Any): Unit =
     if (persistable(v))
       autoPersistPath.foreach(p =>
-        try appendPersist(p, k._1, k._2, v) catch { case _: Throwable => })
+        try appendPersist(p, k._1, k._2, v) catch { case NonFatal(_) => })
 
   // frequency-type probes run on this fraction and scale back up — the
   // 100 TB mode where a full-scan probe per statistic is unaffordable.
@@ -792,8 +793,8 @@ final class EmulatedStatistics(spark: SparkSession,
     // loaded it, and a whole-cache rewrite that ignored those entries
     // would silently drop them (last-writer-wins) — merging first
     // makes concurrent compactors converge instead
-    try loadWal(path): Unit catch { case _: Throwable => }
-    try loadSnapshot(path): Unit catch { case _: Throwable => }
+    try loadWal(path): Unit catch { case NonFatal(_) => }
+    try loadSnapshot(path): Unit catch { case NonFatal(_) => }
     val sb = new java.lang.StringBuilder(1 << 20)
     sb.append('[')
     var first = true
@@ -880,7 +881,7 @@ final class EmulatedStatistics(spark: SparkSession,
       java.nio.charset.StandardCharsets.UTF_8).split('\n').foreach { line =>
       if (line.nonEmpty)
         try n += loadItem(org.json4s.jackson.JsonMethods.parse(line))
-        catch { case _: Throwable => }
+        catch { case NonFatal(_) => }
     }
     n
   }
@@ -901,7 +902,7 @@ final class EmulatedStatistics(spark: SparkSession,
   /** Pre-load cache entries previously saved with [[persistTo]] /
     * appended by auto-persistence (snapshot file plus its WAL). */
   def loadFrom(path: String): Int = {
-    val walN = try loadWal(path) catch { case _: Throwable => 0 }
+    val walN = try loadWal(path) catch { case NonFatal(_) => 0 }
     loadSnapshot(path) + walN
   }
 
@@ -992,7 +993,7 @@ object EmulatedStatistics {
         g.lastModified() < cutoff
       if (stale) g.delete(): Unit
     }
-  } catch { case _: Throwable => }
+  } catch { case NonFatal(_) => }
 
   /** JVM-wide per-path monitors for [[EmulatedStatistics.withFileLock]]. */
   private[stats] val pathLocks =

@@ -57,6 +57,9 @@ class ExtensionsSpec extends AnyFunSuite {
           org.apache.spark.sql.functions.col("t"), 3, 16))
         .head().getSeq[Long](0)
       assert(sigSql.size === 16 && sigSql === sigApi)
+      // {a b c, b c d} against {a b c, b c e}: one shared of three
+      assert(spark.sql("SELECT ngram_jaccard('a b c d', 'a b c e', 3)")
+        .head().getDouble(0) === 1.0 / 3.0)
     } finally {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()

@@ -125,13 +125,12 @@ class MinHashSignatureSpec extends SparkSpec {
     // the band index holds both rows' bands under id 1
     assert(Dedup.minhashBandIndex(docs, "doc_id", "text")
       .filter(col("doc_id") === 1L).count() === 64L)
-    // the pair is found through row (1, a), but verification counts the
-    // shingles of both id-1 rows: the reported Jaccard is not the exact 1.0
-    // of the identical texts
-    val pairs = Dedup.minhashNearDuplicates(docs, "doc_id", "text", 0.3)
+    // the pair is found through row (1, a); verification pairs each id-1
+    // row's text with id 2's, so at threshold 0 the pair is reported once
+    // per pairing: the identical texts with their exact 1.0, and b with a
+    // (no shared shingle) with 0.0
+    val pairs = Dedup.minhashNearDuplicates(docs, "doc_id", "text", 0.0)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(pairs.length === 1)
-    assert(pairs.head._1 === 1L && pairs.head._2 === 2L)
-    assert(pairs.head._3 < 1.0)
+    assert(pairs.sorted.toSeq === Seq((1L, 2L, 0.0), (1L, 2L, 1.0)))
   }
 }

@@ -22,7 +22,7 @@ class StagedSpec extends AnyFunSuite {
     val prefix = s"graft_stagedspec_${System.nanoTime()}_"
     try body(fixture.toString, prefix, Tables.dataFingerprint(fixture.toString))
     finally {
-      Staged.sweep(prefix, "")
+      Staged.sweep(prefix, "", fixture.toString)
       Files.delete(fixture.resolve("t.parquet"))
       Files.delete(fixture)
     }
@@ -92,6 +92,35 @@ class StagedSpec extends AnyFunSuite {
       Staged.dir(prefix, fixture)(writeData)
       assert(entries(prefix) === Set(prefix + tag, inFlight))
       assert(new File(tmp, s"$inFlight/part-0.parquet").exists())
+    }
+  }
+
+  test("fixtures sharing a prefix keep each other's dirs; new data sweeps only its own") {
+    withFixture { (fixture, prefix, tag) =>
+      val other = Files.createTempDirectory("graft_stagedspec_other")
+      Files.writeString(other.resolve("t.parquet"), "other rows")
+      try {
+        val mine = Staged.dir(prefix, fixture)(writeData)
+        val theirs = Staged.dir(prefix, other.toString)(writeData)
+        val theirTag = Tables.dataFingerprint(other.toString)
+        assert(theirTag !== tag)
+        assert(entries(prefix) === Set(prefix + tag, prefix + theirTag))
+        assert(Files.readString(new File(mine, Staged.Marker).toPath) ===
+          new File(fixture).getCanonicalPath)
+        // the first fixture's data changes: its old tag goes, the other
+        // fixture's dir stays
+        Files.writeString(java.nio.file.Paths.get(fixture, "t.parquet"),
+          "regenerated rows")
+        val newTag = Tables.dataFingerprint(fixture)
+        assert(newTag !== tag)
+        Staged.dir(prefix, fixture)(writeData)
+        assert(entries(prefix) === Set(prefix + newTag, prefix + theirTag))
+        assert(new File(theirs, "part-0.parquet").exists())
+      } finally {
+        Staged.sweep(prefix, "", other.toString)
+        Files.delete(other.resolve("t.parquet"))
+        Files.delete(other)
+      }
     }
   }
 

@@ -185,6 +185,104 @@ class StreamingSpec extends SparkSpec {
     assert(sink().filter(col("a_id") === col("b_id")).head(1).isEmpty)
   }
 
+  test("incremental-dedup: no plan carries the batch id, a killed attempt's " +
+      "leftovers are replaced, and the sink equals the one-shot run") {
+    import spark.implicits._
+    import graft.streaming.IncrementalDedup
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val batchId = 987654321L
+    /** Every expression of a physical plan: subqueries, AQE's initial and
+      * final plans, its query stages and cached relations included. */
+    def expressions(p: SparkPlan): Seq[Expression] =
+      p.collectWithSubqueries { case n => n }.flatMap {
+        case a: AdaptiveSparkPlanExec =>
+          expressions(a.inputPlan) ++ expressions(a.executedPlan)
+        case q: QueryStageExec => expressions(q.plan)
+        case m: InMemoryTableScanExec =>
+          m.expressions ++ expressions(m.relation.cachedPlan)
+        case n => n.expressions
+      }
+    def batchLiterals(qe: QueryExecution): Seq[Expression] =
+      (qe.optimizedPlan.collectWithSubqueries { case n => n }
+        .flatMap(_.expressions) ++ expressions(qe.executedPlan))
+        .flatMap(_.collect {
+          case l @ Literal(v, _) if v != null && v.toString.contains(batchId.toString) => l
+        })
+    // the walk sees a literal of the id where there is one
+    assert(batchLiterals(spark.range(1).select(lit(batchId)).queryExecution).nonEmpty)
+
+    val docs = Tables.load(spark, sfDir, "documents")
+    val old = docs.filter(col("doc_id") % 2 === 0)
+    val batch = docs.filter(col("doc_id") % 2 === 1)
+    val oneShot = graft.llm.Dedup.incrementalMinhashNearDuplicates(batch, docs,
+        graft.llm.Dedup.minhashBandIndex(old, "doc_id", "text"), "doc_id", "text", 0.6)
+      .collect().map(_.toString).sorted.toSeq
+    val run = Files.createTempDirectory("graft_incdedup_killed").toFile
+    run.deleteOnExit()
+    val indexDir = s"$run/index"
+    val pairsDir = s"$run/pairs"
+    IncrementalDedup.writeIndex(old, indexDir, batchId = -1L)
+    // a killed attempt of the batch left: its index partition, a stale
+    // pairs partition with a wrong row, and half-written temp siblings
+    // whose files are not parquet at all
+    IncrementalDedup.writeIndex(batch, indexDir, batchId)
+    Seq((1L, 2L, 0.5)).toDF("a_id", "b_id", "jaccard")
+      .write.parquet(s"$pairsDir/batch_id=$batchId")
+    val torn = Seq(s"$pairsDir/.batch_id=$batchId.tmp-killed",
+      s"$indexDir/.batch_id=$batchId.tmp-killed",
+      s"$indexDir/.batch_id=$batchId.old-killed")
+    for (t <- torn) {
+      new java.io.File(t).mkdirs()
+      Files.writeString(new java.io.File(t, "part-0.parquet").toPath, "torn")
+    }
+    def sink() = spark.read.parquet(pairsDir).select("a_id", "b_id", "jaccard")
+    // the leftovers are invisible to readers
+    assert(sink().collect().map(_.toString).toSeq === Seq("[1,2,0.5]"))
+
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = seen.add(qe): Unit
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = seen.add(qe): Unit
+    }
+    def indexWrite(qe: QueryExecution): Boolean =
+      qe.analyzed.toString.contains(s"$indexDir/.batch_id=$batchId.tmp-")
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.listenerManager.register(listener)
+    try {
+      IncrementalDedup.processBatch(spark, docs, batch, batchId, indexDir,
+        pairsDir, 0.6)
+      // delivery is async; the batch's last execution is its index write
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.toArray.exists(q => indexWrite(q.asInstanceOf[QueryExecution])) &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    }
+    val plans = seen.toArray.map(_.asInstanceOf[QueryExecution]).toSeq
+    assert(plans.exists(indexWrite), "the index write was not observed")
+    // the verification ran among the observed plans
+    assert(plans.exists(_.executedPlan.toString.contains("ngram_jaccard")))
+    for (qe <- plans)
+      assert(batchLiterals(qe).isEmpty, s"batch id literal in:\n${qe.executedPlan}")
+
+    assert(sink().collect().map(_.toString).sorted.toSeq === oneShot)
+    assert(torn.forall(t => !new java.io.File(t).exists()))
+    for (d <- Seq(indexDir, pairsDir))
+      assert(new java.io.File(d).list().filter(_.startsWith(".batch_id")).isEmpty)
+    // the index holds the batch's bands once, under its own partition
+    val bands = spark.read.parquet(indexDir)
+      .groupBy(col("batch_id").cast("long")).count()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(bands === Map(-1L -> old.count() * 32, batchId -> batch.count() * 32))
+  }
+
   test("bpe-serve applies merge rules to unseen words and a retried " +
       "batch replaces its own partition") {
     import spark.implicits._
