@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main (driver contract): runs the headline queries on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line. Protocol per BASELINE.md:
@@ -212,7 +213,7 @@ object Bench {
     def floorFileText(): String = try {
       new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(floorPath)), "UTF-8")
-    } catch { case _: Throwable => "" }
+    } catch { case NonFatal(_) => "" }
     val priorFloor: Option[Double] =
       graft.bench.CanaryFloor.read(floorFileText(), floorKey)
     val priorHotFloor: Option[Double] =
@@ -228,7 +229,7 @@ object Bench {
                 java.nio.file.Files.writeString(p, body): Unit
               }
         }
-    } catch { case _: Throwable => }
+    } catch { case NonFatal(_) => }
 
     // a typo'd name must not silently benchmark nothing
     selected.filterNot(SparkEntry.queries.contains).foreach { n =>
@@ -687,7 +688,7 @@ object Bench {
             sfDir)).closureDigest)
       } catch { case e: InterruptedException =>
         Thread.currentThread().interrupt(); throw e
-        case _: Throwable => None })
+        case NonFatal(_) => None })
     // closureValid split (ADVICE r16): reconstruction accepts legacy
     // (unstamped) entries — an old value is at worst an overcount, loose
     // but sound for a q-error row; SEEDING requires a stamp that matches
@@ -788,10 +789,10 @@ object Bench {
       val coldAcc = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
       val coldMs: Map[String, Double] = kit.map { case (label, sql) =>
         val t0 = System.nanoTime()
-        try pipeline.optimizeQuery(sql) catch { case _: Throwable => }
+        try pipeline.optimizeQuery(sql) catch { case NonFatal(_) => }
         val ms = (System.nanoTime() - t0) / 1e6
         coldAcc += ((label, ms))
-        try onCold(coldAcc.toSeq) catch { case _: Throwable => }
+        try onCold(coldAcc.toSeq) catch { case NonFatal(_) => }
         label -> ms
       }.toMap
       val acc = scala.collection.mutable.ArrayBuffer.empty[KitRow]
@@ -927,7 +928,7 @@ object Bench {
         // every kit section because rows only became visible per phase —
         // flushing after each query means a kill mid-kit still leaves
         // every completed row in the artifact
-        try onRow(acc.toSeq) catch { case _: Throwable => }
+        try onRow(acc.toSeq) catch { case NonFatal(_) => }
       }
       acc.toSeq
     }
@@ -1001,7 +1002,7 @@ object Bench {
             } catch {
               case e: InterruptedException =>
                 Thread.currentThread().interrupt(); throw e
-              case _: Throwable =>
+              case NonFatal(_) =>
             }
           }
       }
@@ -1073,7 +1074,7 @@ object Bench {
           } catch {
             case e: InterruptedException =>
               Thread.currentThread().interrupt(); throw e
-            case _: Throwable => -1.0
+            case NonFatal(_) => -1.0
           }
           acc += ((label, qe))
           kitAcc("job_qerror_unseeded") = jmap(acc.toSeq)
@@ -1221,11 +1222,11 @@ object Bench {
                     .getOrElse((-1.0, false))
                 roots(label) = est(g.tables.toSet)
                 nodes(label) = nodeSets.getOrElse(label, Seq.empty).flatMap {
-                  ts => val e = try est(ts)._1 catch { case _: Throwable => -1.0 }
+                  ts => val e = try est(ts)._1 catch { case NonFatal(_) => -1.0 }
                     if (e < 0) None else Some((ts, e))
                 }
               }
-            } catch { case _: Throwable => roots(label) = (-1.0, false) }
+            } catch { case NonFatal(_) => roots(label) = (-1.0, false) }
           }
           (roots.toMap, nodes.toMap, catalogSnap)
         } finally {
@@ -1246,7 +1247,7 @@ object Bench {
                 val g = new graft.opt.JoinGraph(b, stats)
                 f(g, g.tables.toSet)
               }.getOrElse(-1.0)
-            } catch { case _: Throwable => -1.0 }
+            } catch { case NonFatal(_) => -1.0 }
             label -> (if (a < 0 || e < 0) -1.0 else qerr(e, a))
           }
         Seq(
@@ -1327,7 +1328,7 @@ object Bench {
               val g = new graft.opt.JoinGraph(b, stats)
               nativeEstimate(g, g.tables.toSet)
             }.getOrElse((-1.0, false))
-          } catch { case _: Throwable => (-1.0, false) })
+          } catch { case NonFatal(_) => (-1.0, false) })
         }.toMap
       val nativeRoots = nativeRootsFor(jobKit)
       // the native summary grades the planner's working estimates (any
@@ -1413,11 +1414,11 @@ object Bench {
                 nodes.flatMap { case (ts, _, a) =>
                   // per-NODE try: one exotic fragment must drop only its
                   // own node, not the whole query's comparison
-                  val e = try f(g, ts) catch { case _: Throwable => -1.0 }
+                  val e = try f(g, ts) catch { case NonFatal(_) => -1.0 }
                   if (e < 0) None else Some(qerr(e, a))
                 }
               }.getOrElse(Seq.empty)
-            } catch { case _: Throwable => Seq.empty[Double] }
+            } catch { case NonFatal(_) => Seq.empty[Double] }
             label -> summarize(qes)
           }
         val uesRows = rows.map(r => r.label ->

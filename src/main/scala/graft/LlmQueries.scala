@@ -1036,7 +1036,7 @@ object LlmQueries {
       // the run APPENDS to its index — work on a copy of the bootstrap
       val src = java.nio.file.Paths.get(s"$boot/index")
       val dst = java.nio.file.Paths.get(s"$run/index")
-      java.nio.file.Files.walk(src).forEach { p =>
+      scala.util.Using.resource(java.nio.file.Files.walk(src))(_.forEach { p =>
         val t = dst.resolve(src.relativize(p))
         if (java.nio.file.Files.isDirectory(p))
           java.nio.file.Files.createDirectories(t)
@@ -1044,7 +1044,7 @@ object LlmQueries {
           java.nio.file.Files.createDirectories(t.getParent)
           java.nio.file.Files.copy(p, t); ()
         }
-      }
+      })
       graft.streaming.IncrementalDedup.runAvailableNow(
         s, d, s"$boot/incoming", d.schema, dst.toString, s"$run/pairs", 0.6)
         .orderBy(col("a_id"), col("b_id"))

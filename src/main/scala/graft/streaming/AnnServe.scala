@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.llm.Similarity
@@ -11,11 +10,12 @@ import graft.llm.Similarity
   * arrive as a file stream, each micro-batch probes a PERSISTED IVF
   * index ([[graft.llm.Similarity.ivfIndex]] written once, centroids +
   * cell-partitioned assignments), exact cosine re-ranks within the
-  * probed cells, and the per-query top-k lands in a parquet sink
-  * partitioned by the micro-batch id with dynamic partition overwrite —
-  * a RETRIED batch (foreachBatch is at-least-once) replaces its own
-  * partition, so the sink is idempotent per batch and exactly-once
-  * cumulatively. Nothing accumulates on the driver.
+  * probed cells, and the per-query top-k lands in the micro-batch's
+  * partition of a parquet sink, replaced atomically by
+  * [[BatchSink.writePartition]] — a RETRIED batch (foreachBatch is
+  * at-least-once) replaces its own partition, so the sink is idempotent
+  * per batch and exactly-once cumulatively. Nothing accumulates on the
+  * driver.
   *
   * At scale the index is the static side: the tiny centroid table
   * broadcasts, and a batch's probe touches only nProbe/nlist of the
@@ -33,12 +33,8 @@ object AnnServe {
   def processBatch(batch: DataFrame, batchId: Long, centroids: DataFrame,
       assignments: DataFrame, sinkDir: String, k: Int, nProbe: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    Similarity.cosineTopKIvfIndexed(batch, idCol, vecCol, centroids,
-        assignments, k, nProbe)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(sinkDir)
+    BatchSink.writePartition(Similarity.cosineTopKIvfIndexed(batch, idCol,
+      vecCol, centroids, assignments, k, nProbe), sinkDir, batchId)
 
   /** Drain every query file currently in `incomingDir` through the
     * serving pipeline (Trigger.AvailableNow) and return the cumulative
@@ -48,7 +44,7 @@ object AnnServe {
   def runAvailableNow(spark: SparkSession, incomingDir: String,
       schema: StructType, indexDir: String, sinkDir: String, k: Int,
       nProbe: Int, idCol: String = "vec_id", vecCol: String = "embedding",
-      maxFilesPerTrigger: Int = 1, timeoutMs: Long = 300000): DataFrame = {
+      maxFilesPerTrigger: Int = 1): DataFrame = {
     // static side, initialised ONCE and reused by every micro-batch:
     // the tiny centroid table is cached (bounded LRU), so each batch's
     // probe reads it from memory instead of re-listing and re-scanning
@@ -59,17 +55,11 @@ object AnnServe {
     val centroids = graft.llm.Dedup.scopedCache(
       spark.read.parquet(s"$indexDir/centroids"))
     val assignments = spark.read.parquet(s"$indexDir/assignments")
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(incomingDir)
-    val q = stream.writeStream.outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, centroids, assignments, sinkDir, k,
-          nProbe, idCol, vecCol)
-      }
-      .start()
-    require(q.awaitTermination(timeoutMs),
-      s"ann-serve stream timed out after $timeoutMs ms")
+    BatchSink.drain(spark, incomingDir, schema, "ann-serve",
+        maxFilesPerTrigger) { (batch, batchId) =>
+      processBatch(batch, batchId, centroids, assignments, sinkDir, k,
+        nProbe, idCol, vecCol)
+    }
     spark.read.parquet(sinkDir)
       .select(col("query_id"), col("rnk"), col("neighbor_id"),
         col("cos_sim"))

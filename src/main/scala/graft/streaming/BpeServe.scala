@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.llm.Bpe
@@ -13,9 +12,10 @@ import graft.llm.Bpe
   * via `mergesDf`). Unlike the batch gate's dictionary join, serving
   * applies the merge RULES in rank order — a pure per-row fold, so an
   * unseen word segments exactly like the reference BPE encoder — and the
-  * per-document piece counts land in a parquet sink partitioned by
-  * micro-batch id with dynamic partition overwrite (idempotent per
-  * batch, exactly-once cumulatively; nothing accumulates on the driver).
+  * per-document piece counts land in the micro-batch's partition of a
+  * parquet sink, replaced atomically by [[BatchSink.writePartition]]
+  * (idempotent per batch, exactly-once cumulatively; nothing accumulates
+  * on the driver).
   *
   * At scale the merge table is numMerges rows — read once, baked into
   * the segmentation expression as literals, so each micro-batch is a
@@ -31,12 +31,8 @@ object BpeServe {
   def processBatch(batch: DataFrame, batchId: Long,
       merges: Seq[(String, String)], sinkDir: String,
       idCol: String = "doc_id", textCol: String = "text"): Unit =
-    batch.select(col(idCol),
-        Bpe.segmentExpr(col(textCol), merges).as("n_pieces"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(sinkDir)
+    BatchSink.writePartition(batch.select(col(idCol),
+      Bpe.segmentExpr(col(textCol), merges).as("n_pieces")), sinkDir, batchId)
 
   /** Drain every document file currently in `incomingDir` through the
     * segmentation pipeline (Trigger.AvailableNow) and return the
@@ -44,19 +40,12 @@ object BpeServe {
     * `mergesDir` holds the persisted merge table. */
   def runAvailableNow(spark: SparkSession, incomingDir: String,
       schema: StructType, mergesDir: String, sinkDir: String,
-      idCol: String = "doc_id", textCol: String = "text",
-      maxFilesPerTrigger: Int = 1, timeoutMs: Long = 300000): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val merges = Bpe.collectMerges(spark.read.parquet(mergesDir))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(incomingDir)
-    val q = stream.writeStream.outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    BatchSink.drain(spark, incomingDir, schema, "bpe-serve") {
+      (batch, batchId) =>
         processBatch(batch, batchId, merges, sinkDir, idCol, textCol)
-      }
-      .start()
-    require(q.awaitTermination(timeoutMs),
-      s"bpe-serve stream timed out after $timeoutMs ms")
+    }
     spark.read.parquet(sinkDir).select(col(idCol), col("n_pieces"))
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.llm.Clustering
@@ -11,11 +10,11 @@ import graft.llm.Clustering
   * file stream and each micro-batch is routed to its semantic cluster
   * against a PERSISTED centroid set (trained once by
   * [[graft.llm.Clustering.kmeansCentroids]], written via `centroidsDf`).
-  * Assignments land in a parquet sink partitioned by micro-batch id with
-  * dynamic partition overwrite — a retried batch (foreachBatch is
-  * at-least-once) replaces its own partition, so the sink is idempotent
-  * per batch and exactly-once cumulatively. Nothing accumulates on the
-  * driver.
+  * Assignments land in the micro-batch's partition of a parquet sink,
+  * replaced atomically by [[BatchSink.writePartition]] — a retried batch
+  * (foreachBatch is at-least-once) replaces its own partition, so the
+  * sink is idempotent per batch and exactly-once cumulatively. Nothing
+  * accumulates on the driver.
   *
   * At scale the centroid set is k x dim BIGINTs — a few KB read once and
   * baked into the assignment expression as broadcast literals, so each
@@ -33,11 +32,8 @@ object ClusterServe {
   def processBatch(batch: DataFrame, batchId: Long,
       centroids: Array[Array[Long]], sinkDir: String, scale: Long,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    Clustering.assignWithCentroids(batch, idCol, vecCol, centroids, scale)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(sinkDir)
+    BatchSink.writePartition(Clustering.assignWithCentroids(batch, idCol,
+      vecCol, centroids, scale), sinkDir, batchId)
 
   /** Drain every vector file currently in `incomingDir` through the
     * routing pipeline (Trigger.AvailableNow) and return the cumulative
@@ -46,22 +42,15 @@ object ClusterServe {
   def runAvailableNow(spark: SparkSession, incomingDir: String,
       schema: StructType, centroidsDir: String, sinkDir: String,
       scale: Long = 65536L, idCol: String = "vec_id",
-      vecCol: String = "embedding", maxFilesPerTrigger: Int = 1,
-      timeoutMs: Long = 300000): DataFrame = {
+      vecCol: String = "embedding"): DataFrame = {
     // static side: the tiny centroid table, read once for every batch
     val centroids =
       Clustering.collectCentroids(spark.read.parquet(centroidsDir))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(incomingDir)
-    val q = stream.writeStream.outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    BatchSink.drain(spark, incomingDir, schema, "cluster-serve") {
+      (batch, batchId) =>
         processBatch(batch, batchId, centroids, sinkDir, scale, idCol,
           vecCol)
-      }
-      .start()
-    require(q.awaitTermination(timeoutMs),
-      s"cluster-serve stream timed out after $timeoutMs ms")
+    }
     spark.read.parquet(sinkDir)
       .select(col(idCol), col("cluster_id"), col("sq_dist"))
   }

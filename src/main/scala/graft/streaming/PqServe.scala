@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.llm.Similarity
@@ -12,9 +11,9 @@ import graft.llm.Similarity
   * as a file stream, each micro-batch builds its per-query ADC lookup
   * tables, scans the persisted CODES (numSub small ints per corpus
   * vector — the 16x bandwidth lever), exact-cosine re-ranks the top
-  * candidates, and writes the per-query top-k under its batch id with
-  * dynamic partition overwrite — idempotent per batch, exactly-once
-  * cumulatively, nothing on the driver.
+  * candidates, and writes the per-query top-k as its batch's partition
+  * through [[BatchSink.writePartition]] (an atomic replace) — idempotent
+  * per batch, exactly-once cumulatively, nothing on the driver.
   *
   * Batches are independent (the PQ index is static — no append), so
   * micro-batch splitting cannot change any query's answer: the
@@ -30,12 +29,8 @@ object PqServe {
       cb: Array[Array[Array[Double]]], codes: DataFrame, sinkDir: String,
       k: Int, nCandidates: Int, idCol: String = "vec_id",
       vecCol: String = "embedding"): Unit =
-    Similarity.cosineTopKPq(corpus, batch, idCol, vecCol, cb, codes, k,
-        nCandidates)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(sinkDir)
+    BatchSink.writePartition(Similarity.cosineTopKPq(corpus, batch, idCol,
+      vecCol, cb, codes, k, nCandidates), sinkDir, batchId)
 
   /** Drain every query file in `incomingDir` (Trigger.AvailableNow)
     * through the PQ-ADC pipeline and return the cumulative top-k from
@@ -45,23 +40,16 @@ object PqServe {
   def runAvailableNow(spark: SparkSession, incomingDir: String,
       schema: StructType, indexDir: String, corpus: DataFrame,
       sinkDir: String, k: Int, nCandidates: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      maxFilesPerTrigger: Int = 1, timeoutMs: Long = 300000): DataFrame = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     // static side: collected once (kilobytes), reused by every batch
     val cb = Similarity.collectCodebooks(
       spark.read.parquet(s"$indexDir/codebooks"))
     val codes = spark.read.parquet(s"$indexDir/codes")
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(incomingDir)
-    val q = stream.writeStream.outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    BatchSink.drain(spark, incomingDir, schema, "pq-serve") {
+      (batch, batchId) =>
         processBatch(batch, batchId, corpus, cb, codes, sinkDir, k,
           nCandidates, idCol, vecCol)
-      }
-      .start()
-    require(q.awaitTermination(timeoutMs),
-      s"pq-serve stream timed out after $timeoutMs ms")
+    }
     spark.read.parquet(sinkDir)
       .select(col("query_id"), col("rnk"), col("neighbor_id"),
         col("cos_sim"))

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.llm.TextAnalysis
@@ -22,12 +21,12 @@ import graft.llm.TextAnalysis
   * and per-document, so the cumulative sinks are independent of how
   * the stream splits into micro-batches.
   *
-  * Both sinks partition by micro-batch id with dynamic partition
-  * overwrite — a retried batch (foreachBatch is at-least-once)
-  * replaces its own partitions, keeping keep/reject disjoint and
-  * exactly-once cumulatively. Nothing accumulates on the driver; the
-  * per-batch cost is one narrow scoring projection plus two filtered
-  * writes of that batch.
+  * Both sinks hold one partition per micro-batch, replaced atomically by
+  * [[BatchSink.writePartition]] — a retried batch (foreachBatch is
+  * at-least-once) replaces its own partitions, keeping keep/reject
+  * disjoint and exactly-once cumulatively. Nothing accumulates on the
+  * driver; the per-batch cost is one narrow scoring projection plus two
+  * filtered writes of that batch.
   */
 object QualityRouter {
 
@@ -38,16 +37,9 @@ object QualityRouter {
       textCol: String = "text"): Unit = {
     val scored = TextAnalysis.qualityScore(batch, idCol, textCol)
       .select(col("doc_id"), col("quality_score"))
-      .withColumn("batch_id", lit(batchId))
     val inBand = col("quality_score").between(lo, hi)
-    scored.filter(inBand)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(keepDir)
-    scored.filter(!inBand)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(rejectDir)
+    BatchSink.writePartition(scored.filter(inBand), keepDir, batchId)
+    BatchSink.writePartition(scored.filter(!inBand), rejectDir, batchId)
   }
 
   /** Drain every file currently in `incomingDir` through the router
@@ -57,19 +49,12 @@ object QualityRouter {
   def runAvailableNow(spark: SparkSession, incomingDir: String,
       schema: StructType, lo: Double, hi: Double, keepDir: String,
       rejectDir: String, idCol: String = "doc_id",
-      textCol: String = "text", maxFilesPerTrigger: Int = 1,
-      timeoutMs: Long = 300000): DataFrame = {
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(incomingDir)
-    val q = stream.writeStream.outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      textCol: String = "text"): DataFrame = {
+    BatchSink.drain(spark, incomingDir, schema, "quality-router") {
+      (batch, batchId) =>
         processBatch(batch, batchId, lo, hi, keepDir, rejectDir, idCol,
           textCol)
-      }
-      .start()
-    require(q.awaitTermination(timeoutMs),
-      s"quality-router stream timed out after $timeoutMs ms")
+    }
     spark.read.parquet(keepDir).select(col("doc_id"), col("quality_score"))
   }
 }

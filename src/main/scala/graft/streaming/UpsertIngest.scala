@@ -2,17 +2,16 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Continuous corpus INGEST in the append-log + compacted-view shape —
   * the CDC pattern a versioned 100 TB corpus actually uses. Document
   * revisions arrive as a file stream; every micro-batch APPENDS its rows
-  * to a batch-id-partitioned parquet log (dynamic partition overwrite, so
-  * a retried batch replaces its own partition — idempotent per batch,
-  * exactly-once cumulatively, nothing mutates in place). Readers never
-  * see the log: they read the COMPACTED view, last-writer-wins per
-  * document.
+  * to a batch-id-partitioned parquet log ([[BatchSink.writePartition]],
+  * an atomic replace, so a retried batch replaces its own partition —
+  * idempotent per batch, exactly-once cumulatively, nothing else mutates
+  * in place). Readers never see the log: they read the COMPACTED view,
+  * last-writer-wins per document.
   *
   * Compaction is one `max(struct(rev, ...))` hash aggregation keyed on
   * the document id — map-side combined, one shuffle sized by the key
@@ -27,10 +26,7 @@ object UpsertIngest {
     * Exposed so idempotence is directly testable — re-running a batch id
     * leaves the log byte-identical. */
   def appendBatch(batch: DataFrame, batchId: Long, logDir: String): Unit =
-    batch.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(logDir)
+    BatchSink.writePartition(batch, logDir, batchId)
 
   /** Last-writer-wins view of the log: the highest-revision row per
     * document (struct ordering: rev first, text as the deterministic
@@ -46,18 +42,10 @@ object UpsertIngest {
   /** Drain every revision file currently in `incomingDir` into the log
     * (Trigger.AvailableNow) and return the compacted view. */
   def runAvailableNow(spark: SparkSession, incomingDir: String,
-      schema: StructType, logDir: String,
-      maxFilesPerTrigger: Int = 1, timeoutMs: Long = 300000): DataFrame = {
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(incomingDir)
-    val q = stream.writeStream.outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendBatch(batch, batchId, logDir)
-      }
-      .start()
-    require(q.awaitTermination(timeoutMs),
-      s"upsert-ingest stream timed out after $timeoutMs ms")
+      schema: StructType, logDir: String): DataFrame = {
+    BatchSink.drain(spark, incomingDir, schema, "upsert-ingest") {
+      (batch, batchId) => appendBatch(batch, batchId, logDir)
+    }
     compactedView(spark, logDir)
   }
 }

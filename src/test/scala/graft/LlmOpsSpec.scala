@@ -1064,6 +1064,19 @@ class LlmOpsSpec extends SparkSpec {
     val exact = Similarity.cosineTopK(planted, queries, "vec_id",
       "embedding", 5).collect().map(_.toString).sorted.toSeq
     assert(pq === exact)
+    // served as two micro-batches through the same persisted index, with
+    // batch 1 retried: the retry replaces its partition, so the sink
+    // still equals the probe
+    import graft.streaming.PqServe
+    def serve(ids: org.apache.spark.sql.Column, batchId: Long): Unit =
+      PqServe.processBatch(queries.filter(ids), batchId, planted, cb2,
+        spark.read.parquet(s"$dir/codes"), s"$dir/served", 5, 64)
+    serve(col("vec_id") < 2, 0L)
+    serve(col("vec_id") >= 2, 1L)
+    serve(col("vec_id") >= 2, 1L)
+    val served = spark.read.parquet(s"$dir/served").drop("batch_id")
+      .collect().map(_.toString).sorted.toSeq
+    assert(served === exact)
   }
 
   test("PQ encode is a single map pass (no shuffle, no join, no UDF) " +

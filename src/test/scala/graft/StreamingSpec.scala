@@ -189,30 +189,10 @@ class StreamingSpec extends SparkSpec {
       "leftovers are replaced, and the sink equals the one-shot run") {
     import spark.implicits._
     import graft.streaming.IncrementalDedup
-    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     val batchId = 987654321L
-    /** Every expression of a physical plan: subqueries, AQE's initial and
-      * final plans, its query stages and cached relations included. */
-    def expressions(p: SparkPlan): Seq[Expression] =
-      p.collectWithSubqueries { case n => n }.flatMap {
-        case a: AdaptiveSparkPlanExec =>
-          expressions(a.inputPlan) ++ expressions(a.executedPlan)
-        case q: QueryStageExec => expressions(q.plan)
-        case m: InMemoryTableScanExec =>
-          m.expressions ++ expressions(m.relation.cachedPlan)
-        case n => n.expressions
-      }
-    def batchLiterals(qe: QueryExecution): Seq[Expression] =
-      (qe.optimizedPlan.collectWithSubqueries { case n => n }
-        .flatMap(_.expressions) ++ expressions(qe.executedPlan))
-        .flatMap(_.collect {
-          case l @ Literal(v, _) if v != null && v.toString.contains(batchId.toString) => l
-        })
     // the walk sees a literal of the id where there is one
-    assert(batchLiterals(spark.range(1).select(lit(batchId)).queryExecution).nonEmpty)
+    assert(PlanLiterals.of(spark.range(1).select(lit(batchId)).queryExecution,
+      batchId).nonEmpty)
 
     val docs = Tables.load(spark, sfDir, "documents")
     val old = docs.filter(col("doc_id") % 2 === 0)
@@ -242,35 +222,16 @@ class StreamingSpec extends SparkSpec {
     // the leftovers are invisible to readers
     assert(sink().collect().map(_.toString).toSeq === Seq("[1,2,0.5]"))
 
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = seen.add(qe): Unit
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = seen.add(qe): Unit
-    }
-    def indexWrite(qe: QueryExecution): Boolean =
-      qe.analyzed.toString.contains(s"$indexDir/.batch_id=$batchId.tmp-")
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.listenerManager.register(listener)
-    try {
+    // the batch's last write is its index partition
+    val plans = PlanLiterals.captured(spark, pairsDir, indexDir) {
       IncrementalDedup.processBatch(spark, docs, batch, batchId, indexDir,
         pairsDir, 0.6)
-      // delivery is async; the batch's last execution is its index write
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!seen.toArray.exists(q => indexWrite(q.asInstanceOf[QueryExecution])) &&
-          System.nanoTime() < deadline) Thread.sleep(50)
-    } finally {
-      spark.listenerManager.unregister(listener)
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
     }
-    val plans = seen.toArray.map(_.asInstanceOf[QueryExecution]).toSeq
-    assert(plans.exists(indexWrite), "the index write was not observed")
     // the verification ran among the observed plans
     assert(plans.exists(_.executedPlan.toString.contains("ngram_jaccard")))
     for (qe <- plans)
-      assert(batchLiterals(qe).isEmpty, s"batch id literal in:\n${qe.executedPlan}")
+      assert(PlanLiterals.of(qe, batchId).isEmpty,
+        s"batch id literal in:\n${qe.executedPlan}")
 
     assert(sink().collect().map(_.toString).sorted.toSeq === oneShot)
     assert(torn.forall(t => !new java.io.File(t).exists()))
@@ -281,6 +242,59 @@ class StreamingSpec extends SparkSpec {
       .groupBy(col("batch_id").cast("long")).count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(bands === Map(-1L -> old.count() * 32, batchId -> batch.count() * 32))
+  }
+
+  test("no other streaming server's micro-batch plan carries the batch id") {
+    import spark.implicits._
+    import graft.llm.Similarity
+    import graft.streaming._
+    val batchId = 987654321L
+    val docs = Tables.load(spark, sfDir, "documents")
+    val e = Tables.load(spark, sfDir, "embeddings")
+    val queries = e.filter(col("vec_id") < 6)
+    val (ivfCentroids, ivfCells) =
+      Similarity.ivfIndex(e, "vec_id", "embedding", nlist = 4)
+    val cb = Similarity.pqTrainCodebooks(e, "vec_id", "embedding",
+      numSub = 8, codebookSize = 16, iters = 3, dim = Some(64))
+    val codes = Similarity.pqEncode(e, "vec_id", "embedding", cb,
+      idOut = "neighbor_id")
+    // hand-made centroids and merge rules: training them would add
+    // slim-cache entries, and evicting those later logs a lineage warning
+    val dim = e.select(size(col("embedding"))).head().getInt(0)
+    val centroids =
+      Array.tabulate(4, dim)((c, j) => if (j == c) 65536L else 0L)
+    val merges = Seq(("t", "h"), ("th", "e"))
+    // a scan, not a local relation: the optimizer folds a projection over
+    // local rows into the rows themselves
+    val revs = docs.select(col("doc_id"), lit(0).as("rev"), col("text"))
+    val run = Files.createTempDirectory("graft_batchlit").toFile
+    run.deleteOnExit()
+    // (server, the sinks its batch writes, one batch)
+    val servers = Seq[(String, Seq[String], () => Unit)](
+      ("AnnServe", Seq(s"$run/ann"), () => AnnServe.processBatch(queries,
+        batchId, ivfCentroids, ivfCells, s"$run/ann", 3, 2)),
+      ("PqServe", Seq(s"$run/pq"), () => PqServe.processBatch(queries,
+        batchId, e, cb, codes, s"$run/pq", 3, 16)),
+      ("ClusterServe", Seq(s"$run/cluster"), () => ClusterServe.processBatch(
+        e, batchId, centroids, s"$run/cluster", 65536L)),
+      ("BpeServe", Seq(s"$run/bpe"), () => BpeServe.processBatch(docs,
+        batchId, merges, s"$run/bpe")),
+      ("QualityRouter", Seq(s"$run/keep", s"$run/reject"), () =>
+        QualityRouter.processBatch(docs, batchId, 0.3, 0.7, s"$run/keep",
+          s"$run/reject")),
+      ("UpsertIngest", Seq(s"$run/log"), () =>
+        UpsertIngest.appendBatch(revs, batchId, s"$run/log")))
+    val carrying = servers.flatMap { case (name, sinks, batch) =>
+      val plans = PlanLiterals.captured(spark, sinks: _*)(batch())
+      // every sink reads back as the batch's partition
+      for (d <- sinks)
+        assert(spark.read.parquet(d).select(col("batch_id").cast("long"))
+          .distinct().as[Long].collect().toSeq === Seq(batchId), s"$name $d")
+      plans.filter(PlanLiterals.of(_, batchId).nonEmpty).map(name -> _)
+    }
+    assert(carrying.isEmpty, s"batch id literal in the plans of ${
+      carrying.map(_._1).distinct.mkString(", ")}:\n${
+      carrying.map(_._2.executedPlan).mkString("\n")}")
   }
 
   test("bpe-serve applies merge rules to unseen words and a retried " +
@@ -335,7 +349,7 @@ class StreamingSpec extends SparkSpec {
       .select("vec_id", "cluster_id", "sq_dist")
       .collect().map(_.toString).sorted.toSeq
     assert(sink() === batchTwin)
-    // at-least-once retry: dynamic partition overwrite, no duplication
+    // at-least-once retry: the partition is replaced, not duplicated
     ClusterServe.processBatch(b1, 1L, cents, sinkDir, 65536L)
     assert(sink() === batchTwin)
   }
@@ -367,7 +381,7 @@ class StreamingSpec extends SparkSpec {
     }
     assert(view(s"$runB/log") === expected)
     // at-least-once retry: re-running batch 1 must replace its own
-    // partition (dynamic overwrite), leaving the view unchanged
+    // partition (an atomic replace), leaving the view unchanged
     UpsertIngest.appendBatch(revs.filter(col("rev") === 1), 1L,
       s"$runB/log")
     assert(view(s"$runB/log") === expected)
